@@ -69,7 +69,7 @@ def test_asof_join_vs_pandas(spark, sf_dir):
         "ts", "user_id", "value"
     )
     got = asof_join(
-        left, right, on="ts", by="user_id", value_cols=["value"], num_buckets=8
+        left, right, on="ts", by="user_id", value_cols=["value"]
     ).toPandas().sort_values("event_id").reset_index(drop=True)
 
     lp = left.toPandas().sort_values("ts", kind="mergesort")
@@ -91,10 +91,9 @@ def test_asof_join_strict_excludes_exact(spark, sf_dir):
     events = spark.read.parquet(f"{sf_dir}/events.parquet").limit(500)
     left = events.select("event_id", "ts", "user_id")
     right = events.select("ts", "user_id", "value")
-    loose = asof_join(left, right, on="ts", by="user_id", value_cols=["value"],
-                      num_buckets=4).toPandas()
+    loose = asof_join(left, right, on="ts", by="user_id", value_cols=["value"]).toPandas()
     strict = asof_join(left, right, on="ts", by="user_id", value_cols=["value"],
-                       strict=True, num_buckets=4).toPandas()
+                       strict=True).toPandas()
     # strict must never see the exact-match row: every event matches
     # itself loosely, so loose has no nulls while strict has some.
     assert loose["value"].notna().all()
@@ -108,9 +107,8 @@ def test_asof_directions_vs_pandas(spark, sf_dir, direction):
     events = spark.read.parquet(f"{sf_dir}/events.parquet")
     left = events.select("event_id", "ts", "user_id", "value").limit(2000)
     right = events.filter("event_type = 'view'").select("ts", "user_id", "value")
-    got = asof_join(left, right, on="ts", by="user_id",
-                    value_cols=["value"], direction=direction,
-                    num_buckets=8).toPandas().sort_values("event_id")
+    got = asof_join(left, right, on="ts", by="user_id", value_cols=["value"],
+                    direction=direction).toPandas().sort_values("event_id")
     lp = left.toPandas().sort_values("ts", kind="mergesort")
     rp = right.toPandas().sort_values("ts", kind="mergesort")
     want = pd.merge_asof(lp, rp.rename(columns={"value": "value_r"}),
@@ -129,7 +127,7 @@ def test_asof_tolerance_vs_pandas(spark, sf_dir):
     right = events.filter("event_type = 'purchase'").select("ts", "user_id", "value")
     tol = "30 minutes"
     got = asof_join(left, right, on="ts", by="user_id", value_cols=["value"],
-                    tolerance=tol, num_buckets=8).toPandas().sort_values("event_id")
+                    tolerance=tol).toPandas().sort_values("event_id")
     lp = left.toPandas().sort_values("ts", kind="mergesort")
     rp = right.toPandas().sort_values("ts", kind="mergesort")
     want = pd.merge_asof(lp, rp.rename(columns={"value": "value_r"}),
@@ -140,7 +138,7 @@ def test_asof_tolerance_vs_pandas(spark, sf_dir):
     assert a.equals(b)
     # tolerance must actually drop some matches vs untolerated backward
     loose = asof_join(left, right, on="ts", by="user_id",
-                      value_cols=["value"], num_buckets=8).toPandas()
+                      value_cols=["value"]).toPandas()
     assert got["value_r"].notna().sum() < loose["value_r"].notna().sum()
 
 
@@ -264,11 +262,10 @@ def test_asof_nearest_tie_prefers_backward_hand_case(spark):
     r = spark.createDataFrame([("u", 8, 100.0), ("u", 12, 200.0)],
                               "user_id string, ts long, v double")
     got = asof_join(l, r, on="ts", by="user_id", value_cols=["v"],
-                    direction="nearest", num_buckets=2).head()
+                    direction="nearest").head()
     assert got["v"] == 100.0          # tie -> backward
     tight = asof_join(l, r, on="ts", by="user_id", value_cols=["v"],
-                      direction="nearest", tolerance=1,
-                      num_buckets=2).head()
+                      direction="nearest", tolerance=1).head()
     assert tight["v"] is None
 
 
@@ -293,6 +290,6 @@ def test_multi_horizon_asof_hand_case(spark):
     got = multi_horizon_asof(
         l, r, on="ts", by="user_id", value_cols=["pv"],
         horizons=[("1h", "INTERVAL 1 HOUR"),
-                  ("24h", "INTERVAL 24 HOURS")], num_buckets=2).head()
+                  ("24h", "INTERVAL 24 HOURS")]).head()
     assert got["pv_1h"] == 20.0       # 11:30 leaks past t-1h, excluded
     assert got["pv_24h"] == 30.0      # only the prior-day row qualifies

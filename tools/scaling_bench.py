@@ -14,6 +14,7 @@ import datetime
 import json
 import os
 import re
+import statistics
 import subprocess
 import sys
 
@@ -129,7 +130,7 @@ def main() -> None:
     per_pair = sorted(
         (b["pages_per_sec"] / a["pages_per_sec"]) / (args.n4 / args.n)
         for a, b in pairs)
-    eff = per_pair[len(per_pair) // 2]  # median pair
+    eff = statistics.median(per_pair)
 
     summary = {
         "when": datetime.datetime.now().isoformat(timespec="minutes"),

@@ -6,37 +6,32 @@ For each left row (by, t) take the single right row with the largest
 than ``t`` can never influence the output.
 
 Spark has no native as-of join (verified absent in 4.1.2, SURVEY.md
-§2.4), so the engine plans one as:
+§2.4), so the engine plans one as ONE window pass over a side-tagged
+union of both inputs, all in Catalyst (no Python worker):
 
-    left.groupBy(bucket) cogroup right.groupBy(bucket)
-        .applyInPandas(merge_asof per bucket)
+    left (__side=0, __r=NULL) ∪ right (__side=1, __r=struct(t_r, values…))
+    → last(__r, ignorenulls) OVER (PARTITION BY by ORDER BY t, __side DESC
+                                   ROWS UNBOUNDED PRECEDING..CURRENT ROW)
+    → keep __side = 0
 
-where ``bucket = pmod(xxhash64(by), num_buckets)``.  Spark inserts ONE
-hash exchange per side for the cogroup (verified via explain — see
-tests/test_plans.py); the per-(by,time) sort happens inside the merge
-function with a stable mergesort, so no extra range/sort exchange is
-needed (SURVEY.md §3.2 watch-out resolved: pre-repartitionByRange would
-ADD a second shuffle, not remove one).
-
-Scale notes (100 TB / 1000 executors):
-* num_buckets should be ≥ 4× total cores so AQE-sized shuffle
-  partitions stay ≤ ~200 MB; buckets are hash-uniform over entity keys
-  so only entity-level skew (one hot url) matters — handle that with
-  ``hot_keys=find_hot_keys(df, "url")`` (crawl-frequency skew,
-  BASELINE.json:6).
-* the merge is O(n log n) per bucket in numpy (sort) + O(n) merge —
-  working set is one bucket, bounded by bucket count, not data size.
+Shuffle census: ONE hash exchange on ``by`` for the union, and none
+when both inputs already hash-partition on ``by`` (the flagship, whose
+two sides come out of ``feature_vector``'s url windows) or scan a
+``write_bucketed`` layout (``bucket_col``; tests/test_layout.py).  The
+per-key sort is the window's own and spills to disk on a hot key.
 """
 
 from __future__ import annotations
 
+from functools import reduce
+
 import pandas as pd
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-_BUCKET = "__uv_bucket"
+_SIDE = "__side"
+_SALT = "__salt"
 
 
 def asof_join(
@@ -50,8 +45,7 @@ def asof_join(
     value_cols: list[str] | None = None,
     direction: str = "backward",
     strict: bool = False,
-    tolerance: pd.Timedelta | str | None = None,
-    num_buckets: int | None = None,
+    tolerance: pd.Timedelta | str | int | None = None,
     suffix: str = "_r",
     hot_keys: list | None = None,
     salt: int = 8,
@@ -61,135 +55,137 @@ def asof_join(
     (suffixed on collision).  ``direction`` ∈ {backward, forward,
     nearest} (backward is the point-in-time default).
 
+    Nulls: a right row whose ``by`` or ``on`` is null never matches; a
+    left row whose ``on`` is null gets null values.  ``tolerance`` is
+    inclusive, a Timedelta (or a string pandas parses as one) for
+    timestamp ``on`` columns and a number for numeric ones.  Right rows
+    tied on (key, time) resolve in no defined order — pre-aggregate them
+    to one row per (key, time) for deterministic results (the q371
+    contract).
+
     Skew handling (crawl-frequency hot keys, BASELINE.json north_rule):
     pass ``hot_keys`` (entity values whose row counts dwarf the rest —
     find them with ``find_hot_keys``) and the left side of each hot key
     is split across ``salt`` slices by a hash of its *timestamp* while
-    the right side is replicated to every slice.  Backward as-of only
-    needs right rows ≤ t, and each slice carries the key's FULL right
-    history, so the merge per (key, slice) is exact — verified by
-    tests/test_skew.py equality against the unsalted plan.  AQE cannot
-    split a cogroup group, so this explicit mechanism is required.
+    the right side is copied to every slice; the slice is an extra
+    window partition key.  Each slice carries the key's FULL right
+    history, so every slice's answer is exact — verified by
+    tests/test_skew.py equality against the unsalted plan.
 
     ``bucket_col``: name of a PRE-MATERIALIZED bucket column present on
-    BOTH sides (written by plans.layout.write_bucketed).  When both
-    inputs scan bucketed tables on that column, the cogroup's required
-    clustering is already satisfied and the as-of plans with ZERO
-    exchanges (asserted in tests/test_layout.py).  Mutually exclusive
-    with ``hot_keys`` (a bucketed layout fixes bucket ids at write
-    time; re-bucket hot keys at ingest instead).
+    BOTH sides (written by plans.layout.write_bucketed).  The window
+    then partitions by (bucket, by) — the same groups, since bucket =
+    f(by) — so two bucketed scans plan with ZERO exchanges (asserted in
+    tests/test_layout.py).  Mutually exclusive with ``hot_keys`` (a
+    bucketed layout fixes bucket ids at write time; re-bucket hot keys
+    at ingest instead).
     """
     right_on = right_on or on
     right_by = right_by or by
-    if bucket_col is not None and hot_keys:
-        raise ValueError("bucket_col and hot_keys are mutually exclusive")
     if value_cols is None:
         value_cols = [c for c in right.columns
                       if c not in (right_on, right_by, bucket_col)]
-    num_buckets = num_buckets or max(
-        left.sparkSession.sparkContext.defaultParallelism * 4, 8
-    )
+    names = [c + suffix if c in left.columns else c for c in value_cols]
+    return _union_asof(left, [(right, right_by, right_on, value_cols, names)],
+                       on=on, by=by, direction=direction, strict=strict,
+                       tolerance=tolerance, hot_keys=hot_keys, salt=salt,
+                       bucket_col=bucket_col)
 
-    out_names = set(left.columns)
-    renames = {c: (c + suffix if c in out_names else c) for c in value_cols}
 
-    lschema = left.schema
-    rschema = right.schema
-    out_fields = list(lschema.fields) + [
-        T.StructField(renames[c], rschema[c].dataType, True) for c in value_cols
-    ]
-    schema = T.StructType(out_fields)
+def _union_asof(left: DataFrame, rights: list[tuple], *, on: str, by: str,
+                direction: str = "backward", strict: bool = False,
+                tolerance=None, hot_keys: list | None = None, salt: int = 8,
+                bucket_col: str | None = None) -> DataFrame:
+    """The as-of of ``left`` against every ``(right, right_by, right_on,
+    value_cols, out_names)`` in ``rights``, all in ONE window pass: right
+    side i fills only its own struct column ``__r{i}``."""
+    if direction not in ("backward", "forward", "nearest"):
+        raise ValueError(f"direction must be backward|forward|nearest, got {direction!r}")
+    if bucket_col is not None and hot_keys:
+        raise ValueError("bucket_col and hot_keys are mutually exclusive")
+    ltype = {f.name: f.dataType for f in left.schema.fields}
+    # The keys travel under fresh names: a union keeps its children's
+    # hash partitioning only when they agree attribute for attribute,
+    # and a pass-through column of a catalog table carries a qualifier
+    # that defeats the match.
+    keys = {c: f"__k{i}" for i, c in enumerate([bucket_col, by]) if c}
+    slots = [f"__r{i}" for i in range(len(rights))]
 
-    lcols = list(left.columns)
-    tol = pd.Timedelta(tolerance) if isinstance(tolerance, str) else tolerance
+    # each right side as (keys, on, __r): __r = struct(t, v0, v1, …) is
+    # never null, so last(ignorenulls) sees exactly the right rows
+    packed = []
+    for r, r_by, r_on, value_cols, _ in rights:
+        r_t = F.col(r_on).cast(ltype[on])
+        src = {bucket_col: bucket_col, by: r_by}
+        packed.append(
+            r.filter(F.col(r_by).isNotNull() & F.col(r_on).isNotNull())
+            .select(*[F.col(src[c]).cast(ltype[c]).alias(k) for c, k in keys.items()],
+                    r_t.alias(on),
+                    F.struct(r_t.alias("t"), *[F.col(c).alias(f"v{k}")
+                                               for k, c in enumerate(value_cols)])
+                    .alias("__r")))
+    null_slot = [F.lit(None).cast(p.schema["__r"].dataType) for p in packed]
 
-    # Re-alias every right column to a fresh name BEFORE the cogroup:
-    # when `right` is derived from `left` (self-as-of, e.g. joining a
-    # table to a snapshot of itself) both children share attribute ids,
-    # and Catalyst's column pruning can mis-resolve across the cogroup
-    # (observed: count() pruned url/warc_ts out of the right child).
-    # A different-name Alias mints new expression ids, breaking the
-    # shared lineage; merge() renames them back first thing.
-    rsel = [right_by, right_on] + value_cols
-    unalias = {f"__uvr_{i}": c for i, c in enumerate(rsel)}
-    ralias = [F.col(c).alias(f"__uvr_{i}") for i, c in enumerate(rsel)]
-    if bucket_col is not None:
-        # carry the pre-materialized bucket through the re-alias; naming
-        # it _BUCKET here means no further withColumn (which would break
-        # the alias-preserved hashpartitioning) is needed below
-        ralias.append(F.col(bucket_col).alias(_BUCKET))
-    right = right.select(*ralias)
-    r_by, r_on = "__uvr_0", "__uvr_1"
-
-    def merge(lpdf: pd.DataFrame, rpdf: pd.DataFrame) -> pd.DataFrame:
-        lpdf = lpdf.drop(columns=[_BUCKET])
-        rpdf = rpdf.drop(columns=[_BUCKET]).rename(columns=unalias)
-        if not len(lpdf):
-            return pd.DataFrame(columns=lcols + [renames[c] for c in value_cols])
-        # stable sort on time only — merge_asof's `by` handles the key;
-        # mergesort keeps equal-timestamp right rows in input order so
-        # "latest" on ties is deterministic.
-        lpdf = lpdf.sort_values(on, kind="mergesort").reset_index(drop=True)
-        rpdf = (
-            rpdf[[right_by, right_on] + value_cols]
-            .rename(columns={right_by: by, right_on: on, **renames})
-            .sort_values(on, kind="mergesort")
-            .reset_index(drop=True)
-        )
-        merged = pd.merge_asof(
-            lpdf,
-            rpdf,
-            on=on,
-            by=by,
-            direction=direction,
-            allow_exact_matches=not strict,
-            tolerance=tol,
-        )
-        # int columns that picked up NaN on misses → pandas nullable Int64
-        for c in value_cols:
-            f = rschema[c].dataType
-            if isinstance(f, (T.LongType, T.IntegerType)) and merged[renames[c]].dtype.kind == "f":
-                merged[renames[c]] = merged[renames[c]].astype("Int64")
-        return merged
-
+    branches = [left.select(
+        *[F.col(c).alias(keys[c]) if c in keys else c for c in left.columns],
+        F.lit(0).alias(_SIDE), *[n.alias(s) for n, s in zip(null_slot, slots)])]
+    for i, p in enumerate(packed):
+        branches.append(p.select(
+            *[F.col(keys.get(c, c)) if keys.get(c, c) in p.columns
+              else F.lit(None).cast(ltype[c]).alias(c) for c in left.columns],
+            F.lit(1).alias(_SIDE),
+            *[(F.col("__r") if j == i else n).alias(s)
+              for j, (n, s) in enumerate(zip(null_slot, slots))]))
+    part = list(keys.values())
     if hot_keys:
-        hot = F.array(*[F.lit(k) for k in hot_keys])
-        # left: hot rows fan out over `salt` slices by timestamp hash
-        lsalt = F.when(
-            F.array_contains(hot, F.col(by)),
-            F.pmod(F.xxhash64(F.col(on)), F.lit(salt)),
-        ).otherwise(F.lit(0))
-        lb = left.withColumn(
-            _BUCKET,
-            F.pmod(F.xxhash64(F.col(by), lsalt), F.lit(num_buckets)),
-        )
-        # right: hot rows replicated into every slice (backward as-of
-        # may need any earlier right row in any slice)
-        rsalts = F.when(
-            F.array_contains(hot, F.col(r_by)),
-            F.sequence(F.lit(0), F.lit(salt - 1)).cast("array<long>"),
-        ).otherwise(F.array(F.lit(0)).cast("array<long>"))
-        rb = right.withColumn("__uv_salt", F.explode(rsalts)).withColumn(
-            _BUCKET,
-            F.pmod(F.xxhash64(F.col(r_by), F.col("__uv_salt")), F.lit(num_buckets)),
-        ).drop("__uv_salt")
-    elif bucket_col is not None:
-        lb = left.withColumn(_BUCKET, F.col(bucket_col))
-        rb = right  # _BUCKET already aliased in the re-alias select
-    else:
-        lb = left.withColumn(_BUCKET, F.pmod(F.xxhash64(F.col(by)), F.lit(num_buckets)))
-        rb = right.withColumn(_BUCKET, F.pmod(F.xxhash64(F.col(r_by)), F.lit(num_buckets)))
-    return (
-        lb.groupBy(_BUCKET)
-        .cogroup(rb.groupBy(_BUCKET))
-        .applyInPandas(merge, schema=schema)
-    )
+        is_hot = F.array_contains(F.array(*[F.lit(k) for k in hot_keys]), F.col(keys[by]))
+        branches[0] = branches[0].withColumn(
+            _SALT, F.when(is_hot, F.pmod(F.xxhash64(on), F.lit(salt)))
+            .otherwise(F.lit(0).cast("long")))
+        branches[1:] = [b.withColumn(_SALT, F.explode(
+            F.when(is_hot, F.sequence(F.lit(0), F.lit(salt - 1)).cast("array<long>"))
+            .otherwise(F.array(F.lit(0).cast("long"))))) for b in branches[1:]]
+        part.append(_SALT)
+    u = reduce(DataFrame.union, branches)
+
+    # Running frames only (O(n) per key): backward orders time ascending,
+    # forward descending.  At a tied timestamp the right row sorts first,
+    # inside the frame, unless `strict`.
+    tie = F.col(_SIDE).asc() if strict else F.col(_SIDE).desc()
+    w = Window.partitionBy(*part)
+    back = w.orderBy(F.col(on).asc(), tie).rowsBetween(
+        Window.unboundedPreceding, Window.currentRow)
+    fwd = w.orderBy(F.col(on).desc(), tie).rowsBetween(
+        Window.unboundedPreceding, Window.currentRow)
+    t = F.col(on)
+
+    def gap(m):
+        return F.when(m["t"] <= t, t - m["t"]).otherwise(m["t"] - t)
+
+    if isinstance(tolerance, str) or hasattr(tolerance, "total_seconds"):
+        tolerance = pd.Timedelta(tolerance).to_pytimedelta()
+    matched = []
+    for s in slots:
+        b = F.last(s, ignorenulls=True).over(back)
+        f = F.last(s, ignorenulls=True).over(fwd)
+        m = {"backward": b, "forward": f}.get(direction)
+        if m is None:  # nearest: the closer candidate, ties to backward
+            m = F.when(f.isNull() | (b.isNotNull() & (gap(b) <= gap(f))), b).otherwise(f)
+        if tolerance is not None:
+            m = F.when(gap(m) <= F.lit(tolerance), m)
+        matched.append(F.when(t.isNotNull(), m).alias(s))
+    lcols = [keys.get(c, c) for c in left.columns]
+    out = u.select(*lcols, _SIDE, *matched).filter(F.col(_SIDE) == 0)
+    return out.select(*[F.col(k).alias(c) for k, c in zip(lcols, left.columns)], *[
+        F.col(s)[f"v{k}"].alias(name)
+        for s, (_, _, _, _, names) in zip(slots, rights)
+        for k, name in enumerate(names)])
 
 
 def find_hot_keys(df: DataFrame, by: str, *, min_rows: int = 1_000_000,
                   top: int = 64) -> list:
     """Entity values whose row counts exceed ``min_rows`` (the scale at
-    which one cogroup pandas group stops fitting an executor).  One
+    which one key's window partition makes a straggler task).  One
     partial-agg count — cheap relative to the join itself."""
     rows = (
         df.groupBy(by).agg(F.count("*").alias("__n"))
@@ -236,7 +232,7 @@ def multi_horizon_asof(left: DataFrame, right: DataFrame, *,
                        on: str = "warc_ts", by: str = "url",
                        value_cols: list[str] | None = None,
                        horizons: list[tuple[str, str]] = (),
-                       **asof_kwargs) -> DataFrame:
+                       suffix: str = "_r", **asof_kwargs) -> DataFrame:
     """Point-in-time feature vector at MULTIPLE lag horizons — the
     feature-store staple on top of :func:`asof_join`: for each left
     row at time t, fetch the last right observation at-or-before
@@ -250,26 +246,18 @@ def multi_horizon_asof(left: DataFrame, right: DataFrame, *,
 
     Mechanics: shifting the RIGHT timestamps forward by Δ makes the
     ordinary backward as-of at t equivalent to "last right row with
-    original ts ≤ t − Δ" — so every horizon is one standard
-    :func:`asof_join` (same cogroup/mergesort machinery, same
-    salting/bucketing options via ``asof_kwargs``), chained left to
-    right.  H horizons = H cogroups; on a ``write_bucketed`` layout
-    each plans exchange-free like the flagship.
-
-    The usual backward-as-of caveat applies doubly here: duplicate
-    right (key, ts) rows resolve by position in pandas — pre-aggregate
-    the right side to one row per (key, ts) for deterministic
-    results (the q371 contract).
+    original ts ≤ t − Δ".  The H shifted copies of the right side are
+    unioned in together, each filling only its own struct column, so
+    all H horizons come out of ONE backward window pass (same
+    salting/bucketing options and duplicate-(key, ts) caveat as
+    :func:`asof_join`, via ``asof_kwargs``).
     """
     if value_cols is None:
         value_cols = [c for c in right.columns if c not in (on, by)]
-    out = left
+    rights = []
     for label, interval in horizons:
-        shifted = right
-        for c in value_cols:
-            shifted = shifted.withColumnRenamed(c, f"{c}_{label}")
-        shifted = shifted.withColumn(on, F.col(on) + F.expr(interval))
-        out = asof_join(out, shifted, on=on, by=by,
-                        value_cols=[f"{c}_{label}" for c in value_cols],
-                        direction="backward", **asof_kwargs)
-    return out
+        names = [f"{c}_{label}" for c in value_cols]
+        rights.append((right.withColumn(on, F.col(on) + F.expr(interval)), by, on,
+                       value_cols, [n + suffix if n in left.columns else n for n in names]))
+    return _union_asof(left, rights, on=on, by=by, direction="backward",
+                       **asof_kwargs)

@@ -6,8 +6,10 @@
 
 Shuffle census at scale: extract_stage is shuffle-free; feature_vector
 costs ONE hash exchange on `url` (all window functions share the same
-partitioning); asof_join costs one exchange per side on the url-hash
-bucket.  Nothing else moves data.
+partitioning); asof_join is one more window over the union of its two
+sides, and both sides keep that url partitioning, so it moves nothing.
+The whole flagship is one exchange and one Python node (the extract
+MapInArrow) — asserted in tests/test_plans.py.
 """
 
 from __future__ import annotations
@@ -82,10 +84,10 @@ def enrich_asof(features: DataFrame, feature_src: DataFrame, **kwargs) -> DataFr
 
 def flagship_enriched(pages: DataFrame, **kwargs) -> DataFrame:
     """pages → features → backward-as-of enrichment against the per-url
-    first-crawl snapshot.  The feature DataFrame feeds BOTH join sides,
-    so it is persisted before branching — without this the whole
-    transcode+window pipeline would execute twice (on a cluster the
-    snapshot layer materializes it instead; see
+    first-crawl snapshot.  The feature DataFrame feeds BOTH union
+    branches of the as-of, so it is persisted before branching — without
+    this the whole transcode+window pipeline would execute twice (on a
+    cluster the snapshot layer materializes it instead; see
     run_checkpointed_pipeline)."""
     from pyspark import StorageLevel
 
@@ -107,9 +109,9 @@ def flagship_over_bucketed(spark, table: str, **kwargs) -> DataFrame:
     This is the 100 TB production shape: transcode+extract is
     shuffle-free row-parallel work paid once at ingest, the bucketed
     (uv_bucket / url, warc_ts-sorted) layout is written once, and every
-    subsequent feature/as-of run over it shuffles NOTHING — windows
-    partition by (bucket, key) and the as-of cogroup consumes the
-    materialized bucket directly."""
+    subsequent feature/as-of run over it shuffles NOTHING — windows,
+    the as-of's included, partition by (bucket, key) on the
+    materialized bucket."""
     from ultraviolet_spark.operators.windows import dedup_latest
     from ultraviolet_spark.plans.layout import BUCKET_COL, read_bucketed
 

@@ -7,7 +7,7 @@ Two materialized layouts:
   sorted within each bucket file.  A scan of the table reports
   ``hashpartitioning(key, N)``, so every downstream ``groupBy(key)``,
   equi-join on key, window ``partitionBy(key)`` and — via
-  ``asof_join(bucket_col=...)`` — the flagship as-of cogroup plans with
+  ``asof_join(bucket_col=...)`` — the flagship as-of window plans with
   ZERO exchanges (asserted in tests/test_layout.py).  This is the
   Iceberg ``bucket(N, url)`` partition transform's local equivalent; on
   a cluster the same DataFrame goes through ``writeTo(...).partitionedBy
@@ -38,10 +38,11 @@ BUCKET_COL = "uv_bucket"
 
 def add_bucket_column(df: DataFrame, by: str, num_buckets: int,
                       bucket_col: str = BUCKET_COL) -> DataFrame:
-    """Materialize the engine's as-of bucket id (pmod(xxhash64(by), N))
-    as a real column — the SAME expression asof_join computes on the
-    fly, so a table bucketed on this column feeds the cogroup with no
-    exchange and identical group boundaries."""
+    """Materialize a hash bucket id of ``by`` (pmod(xxhash64(by), N)) as
+    a real column.  It is a function of the key, so partitioning by
+    (bucket, key) forms the same groups as by key alone, and a table
+    bucketed on this column feeds key windows and the as-of join
+    (``asof_join(bucket_col=...)``) with no exchange."""
     return df.withColumn(
         bucket_col, F.pmod(F.xxhash64(F.col(by)), F.lit(num_buckets)))
 
@@ -52,8 +53,8 @@ def write_bucketed(df: DataFrame, table: str, *, by: str = "url",
                    path: str | None = None) -> None:
     """Materialize the url-bucket / (bucket, key, ts)-sorted layout the
     as-of path assumes.  Buckets on the precomputed ``bucket_col`` so
-    the scan's hashpartitioning matches the cogroup's grouping key
-    exactly; sorts within buckets by (key, ts) so per-key history is
+    the scan's hashpartitioning satisfies every (bucket, key) window
+    and the as-of join; sorts within buckets by (key, ts) so per-key history is
     contiguous and in time order on disk.  ``path`` makes it an
     external table (warehouse.dir is a static conf)."""
     w = (add_bucket_column(df, by, num_buckets, bucket_col)

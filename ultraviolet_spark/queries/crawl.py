@@ -1938,7 +1938,7 @@ def q140(spark, sf_dir):
     pattern: one spine (purchases) as-of-joined against THREE feature
     sources (last click value, last view value, signup time), each ≤
     the spine timestamp, composed left-to-right so the spine keeps its
-    grain.  Each hop is the engine's cogroup as-of merge; DuckDB's
+    grain.  Each hop is the engine's window as-of; DuckDB's
     native chained ASOF JOIN is the independent oracle."""
     ev = _t(spark, sf_dir, "events")
 

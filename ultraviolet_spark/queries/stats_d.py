@@ -571,8 +571,8 @@ def q371(spark, sf_dir):
     candidate (the pandas merge_asof convention, pinned empirically
     and replayed by the oracle's (|Δ|, right-ts) ordering).  The right
     side is deduped to one row per (user, ts) first — nearest is
-    ill-defined under duplicate right timestamps (position-dependent
-    in pandas), so the operator contract requires uniqueness."""
+    ill-defined under duplicate right timestamps (they resolve in no
+    defined order), so the operator contract requires uniqueness."""
     from ultraviolet_spark.operators.asof import asof_join
 
     ev = _t(spark, sf_dir, "events")
