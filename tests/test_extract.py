@@ -177,3 +177,35 @@ def test_entity_dense_throughput_regression():
         assert mixed >= 14.0, mixed      # loose absolute floor (slow mode)
         assert ascii_dense >= 18.0, ascii_dense
         assert plain >= 60.0, plain
+
+
+# filler rows dense in touching tags ('<a><b>' is two spans that touch)
+# and tags that end exactly at a row boundary, to push a batch past the
+# slice-stitch limit of max(4096, total >> 9) removed spans
+_DENSE_FILLER = ["<a><b>x" * 60 + "<i>", "<p>" + "t<a><b>" * 70,
+                 "<u>y<b c", "&amp;<a><b>&#x20AC;" * 40 + "<br>"] * 12
+
+
+def _assert_dense_extract(rows):
+    from ultraviolet_spark.kernels.extract import _strip_tags
+
+    data, offsets = rows_from_list([r.encode("utf-8") for r in rows])
+    rem_s, _ = _strip_tags(data, offsets)
+    assert len(rem_s) + 1 > max(4096, int(offsets[-1]) >> 9)  # dense branch
+    out, oo = extract_text(data, offsets)
+    got = [r.decode("utf-8") for r in list_from_rows(out, oo)]
+    assert got == [golden_extract(r) for r in rows]
+
+
+def test_dense_keep_mask_fallback_equals_sequential():
+    """Tag-dense batches take the dense keep-mask fallback of
+    extract_text, whose delta scatter must cancel at touching spans
+    and at spans ending on a row boundary."""
+    _assert_dense_extract(_DENSE_FILLER + ["", "<", "a<b>", "<script>x</script>z",
+                                           "é<a>中<b>💩"])
+
+
+@settings(max_examples=60, deadline=None)
+@given(st.lists(_html, min_size=1, max_size=8))
+def test_fuzz_dense_keep_mask_fallback(rows):
+    _assert_dense_extract(rows + _DENSE_FILLER)

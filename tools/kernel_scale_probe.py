@@ -1,6 +1,8 @@
 """Kernel-only multiprocessing scaling probe (no Spark): measures this
-host's achievable parallel speedup for the transcode+extract chain at a
-given page size — the hardware envelope quoted in BASELINE.md."""
+host's achievable parallel speedup for the engine's fused extract stage
+(``transcode_extract_batches`` with features: decode, extract, text
+length and class histogram) at a given page size — the hardware envelope
+quoted in BASELINE.md."""
 
 from __future__ import annotations
 
@@ -17,19 +19,15 @@ def work(args):
     page_kb, rows, reps = args
     import pyarrow as pa
 
-    from ultraviolet_spark.kernels.buffers import binary_to_offsets
-    from ultraviolet_spark.kernels.encode import codepoints_to_utf8
-    from ultraviolet_spark.kernels.extract import extract_text
-    from ultraviolet_spark.kernels.transcode import decode_auto
+    from ultraviolet_spark.functions.udfs import transcode_extract_batches
 
     words = max(page_kb * 1024 // 6, 10)
     html = ("<html><body><p>" + "wörd " * words + "</p></body></html>").encode()
-    arr = pa.array([html] * rows, type=pa.large_binary())
-    data, offsets, _ = binary_to_offsets(arr)
+    batch = pa.RecordBatch.from_arrays(
+        [pa.array([html] * rows, type=pa.large_binary())], names=["html"])
     for _ in range(reps):
-        cp, cpo, nr, bom = decode_auto(data, offsets)
-        u8, u8o = codepoints_to_utf8(cp, cpo)
-        extract_text(u8, u8o)
+        for _ in transcode_extract_batches(iter([batch]), with_features=True):
+            pass
     return 0
 
 

@@ -6,7 +6,10 @@ Two surfaces (SURVEY.md §2.9):
   pages(html binary, …) → text_extracted(url, warc_ts, text,
   text_bytes, valid_utf8, n_replacements, bom, lang).  Pure
   Arrow-in/Arrow-out, iterator style (never materializes a partition),
-  zero pandas, zero per-row Python.
+  zero pandas, zero per-row Python.  UTF-8 is its only pivot: html
+  decodes once to UTF-8 (clean UTF-8 rows pass through unchanged),
+  text is extracted from those bytes, and the optional features read
+  the extracted UTF-8 with the trusted decoder.
 
 * scalar ``pandas_udf`` wrappers (utf8_valid_udf, …) for use inside
   ordinary DataFrame expressions; these cross through pandas Series
@@ -30,10 +33,17 @@ from ultraviolet_spark.kernels.buffers import (
     binary_to_offsets,
     offsets_to_pyarrow_string,
 )
-from ultraviolet_spark.kernels.classify import K, codepoint_class_histogram
-from ultraviolet_spark.kernels.encode import codepoints_to_utf8
+from ultraviolet_spark.kernels.classify import (
+    K,
+    codepoint_class_histogram,
+    utf8_class_histogram,
+)
 from ultraviolet_spark.kernels.extract import extract_text
-from ultraviolet_spark.kernels.transcode import BOM_NAMES, decode_auto, transcode
+from ultraviolet_spark.kernels.transcode import (
+    BOM_NAMES,
+    decode_to_utf8,
+    transcode,
+)
 from ultraviolet_spark.kernels.utf8 import (
     utf8_decode_replace,
     utf8_to_codepoints,
@@ -48,9 +58,8 @@ TEXT_EXTRACTED_FIELDS = [
     T.StructField("bom", T.StringType()),
 ]
 
-# appended when with_features=True (fused kernel pass — the codepoints
-# are already materialized in the worker, so the histogram costs no
-# extra JVM→Python crossing)
+# appended when with_features=True (fused into the same pass, so the
+# histogram costs no extra JVM→Python crossing)
 TEXT_FEATURE_FIELDS = [
     T.StructField("text_len", T.LongType()),
     T.StructField("cp_hist", T.ArrayType(T.LongType())),
@@ -163,13 +172,14 @@ def transcode_extract_batches(
     column through untouched; appends TEXT_EXTRACTED_FIELDS (+
     TEXT_FEATURE_FIELDS when ``with_features``: codepoint count and
     class histogram of the extracted text, fused into the same pass so
-    the text crosses the JVM↔Python boundary exactly once)."""
+    the text crosses the JVM↔Python boundary exactly once).  The html
+    buffer is never written: clean UTF-8 rows are views of it."""
     for batch in batches:
         html = batch.column(html_col)
         data, offsets, nulls = binary_to_offsets(html)
-        cp, cpo, n_repl, bom = decode_auto(data, offsets)
-        u8, u8o = codepoints_to_utf8(cp, cpo)
+        u8, u8o, n_repl, bom = decode_to_utf8(data, offsets)
         ext, exto = extract_text(u8, u8o)
+        del u8                      # free the decoded html before the features
 
         cols, names = [], []
         for name, col in zip(batch.schema.names, batch.columns):
@@ -188,10 +198,11 @@ def transcode_extract_batches(
         cols.append(pa.array(BOM_NAMES[bom]))
         names.append("bom")
         if with_features:
-            ecp, ecpo = utf8_to_codepoints(ext, exto)
-            cols.append(pa.array(np.diff(ecpo), type=pa.int64()))
+            # extracted text is well-formed by construction: no
+            # second validation pass
+            text_len, hist = utf8_class_histogram(ext, exto)
+            cols.append(pa.array(text_len, type=pa.int64()))
             names.append("text_len")
-            hist = codepoint_class_histogram(ecp, ecpo)
             cols.append(pa.FixedSizeListArray.from_arrays(
                 pa.array(hist.ravel(), type=pa.int64()), K).cast(pa.list_(pa.int64())))
             names.append("cp_hist")

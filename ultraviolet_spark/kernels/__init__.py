@@ -21,6 +21,7 @@ from ultraviolet_spark.kernels.utf16 import utf16_to_codepoints  # noqa: F401
 from ultraviolet_spark.kernels.utf32 import utf32_to_codepoints  # noqa: F401
 from ultraviolet_spark.kernels.transcode import (  # noqa: F401
     decode_auto,
+    decode_to_utf8,
     detect_bom,
     transcode,
 )

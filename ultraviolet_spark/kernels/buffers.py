@@ -142,3 +142,40 @@ def pad_rows(
             padded[idx] = data[:total]
     padded_row_starts = offsets + pad * np.arange(n + 1, dtype=_I64)
     return padded, padded_row_starts
+
+
+def copy_rows(dst: np.ndarray, dst_starts: np.ndarray, src: np.ndarray,
+              src_starts: np.ndarray, lens: np.ndarray) -> None:
+    """dst[dst_starts[j]:+lens[j]] = src[src_starts[j]:+lens[j]] for every
+    row j, with no per-byte Python."""
+    total = int(lens.sum())
+    if not total:
+        return
+    if total // len(lens) >= 256:
+        # KB-sized rows: bounded per-row slice memcpys beat the
+        # byte-granular fancy gather ~35× (8-byte indices dominate the
+        # traffic; same trick as pad_rows)
+        for d0, s0, nb in zip(dst_starts.tolist(), src_starts.tolist(),
+                              lens.tolist()):
+            dst[d0:d0 + nb] = src[s0:s0 + nb]
+    else:
+        # one arange plus one repeat per side: index = row base + rank
+        # of the byte within the output
+        rank = np.arange(total, dtype=_I64)
+        before = np.cumsum(lens) - lens
+        dst[rank + np.repeat(dst_starts - before, lens)] = \
+            src[rank + np.repeat(src_starts - before, lens)]
+
+
+def gather_rows(src: np.ndarray, starts: np.ndarray, lens: np.ndarray,
+                sentinel: bool = False) -> tuple[np.ndarray, np.ndarray]:
+    """Rows src[starts[j]:+lens[j]] packed into a fresh buffer, with one
+    0x00 byte after each when ``sentinel`` (the ``pad_rows`` layout).
+    Returns (buf, row_starts[n+1])."""
+    row_starts = np.zeros(len(lens) + 1, dtype=_I64)
+    np.cumsum(lens + sentinel, out=row_starts[1:])
+    buf = np.empty(int(row_starts[-1]), dtype=np.uint8)
+    if sentinel:
+        buf[row_starts[1:] - 1] = 0
+    copy_rows(buf, row_starts[:-1], src, starts, lens)
+    return buf, row_starts

@@ -17,6 +17,8 @@ from functools import lru_cache
 
 import numpy as np
 
+from ultraviolet_spark.kernels.utf8 import utf8_to_codepoints_trusted
+
 CLASS_NAMES = [
     "letter", "mark", "number", "punct", "symbol", "sep", "other",
     "ascii", "latin1", "bmp", "astral",
@@ -90,3 +92,27 @@ def codepoint_class_histogram(cp: np.ndarray, offsets: np.ndarray) -> np.ndarray
     hist[:, :7] = h3.sum(axis=2)                          # categories
     hist[:, 7:] = h3.sum(axis=1)                          # planes
     return hist
+
+
+_U8_CHUNK = 1 << 17  # UTF-8 bytes per row-aligned slice
+
+
+def utf8_class_histogram(data: np.ndarray, offsets: np.ndarray):
+    """Well-formed UTF-8 rows → (codepoint count i64[n], histogram
+    i64[n, K]): ``codepoint_class_histogram`` of
+    ``utf8_to_codepoints_trusted``, one row-aligned ~128 KB slice at a
+    time, so the u32 codepoints and their int64 lead indices stay
+    cache-sized instead of ~12 bytes per character of the batch."""
+    n = len(offsets) - 1
+    text_len = np.zeros(n, dtype=np.int64)
+    hist = np.zeros((n, K), dtype=np.int64)
+    r0 = 0
+    while r0 < n:
+        r1 = int(np.searchsorted(offsets, offsets[r0] + _U8_CHUNK, "left"))
+        r1 = min(max(r1, r0 + 1), n)   # a single >chunk row stands alone
+        cp, cpo = utf8_to_codepoints_trusted(
+            data[offsets[r0]:offsets[r1]], offsets[r0:r1 + 1] - offsets[r0])
+        text_len[r0:r1] = np.diff(cpo)
+        hist[r0:r1] = codepoint_class_histogram(cp, cpo)
+        r0 = r1
+    return text_len, hist

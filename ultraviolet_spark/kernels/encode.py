@@ -1,7 +1,9 @@
 """Vectorized codepoint-array → UTF-8/16/32 encoders.
 
-Input is the pivot representation used by every kernel: a flat
-``uint32`` codepoint array plus int64 row offsets.  Callers guarantee
+Input is a flat ``uint32`` codepoint array plus int64 row offsets, as
+the UTF-16/32 decoders emit it (the engine's decode pivot is UTF-8, see
+transcode.decode_to_utf8; codepoints are only the way between
+encodings).  Callers guarantee
 codepoints are scalar values (≤ U+10FFFF, no surrogates) — decoders
 only ever emit scalar values, so encode∘decode is total.
 """

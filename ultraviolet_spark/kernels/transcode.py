@@ -1,12 +1,23 @@
-"""BOM detection, auto-decode, and any→any transcoding through the
-UTF-32 codepoint pivot (SURVEY.md §2.1 `transcode`)."""
+"""BOM detection, auto-decode, and any→any transcoding
+(SURVEY.md §2.1 `transcode`).
+
+UTF-8 is the one decode pivot: `decode_to_utf8` sniffs each row's BOM,
+validates UTF-8 rows in place and repairs only the rows that need
+U+FFFD, and sends only UTF-16/32 rows through codepoints.
+`decode_auto` and `transcode(src="auto")` ride on it; fixed-encoding
+transcodes go through the per-encoding codepoint decoders and
+encoders."""
 
 from __future__ import annotations
 
 import numpy as np
 
 from ultraviolet_spark.kernels import encode as _enc
+from ultraviolet_spark.kernels.buffers import copy_rows, gather_rows
 from ultraviolet_spark.kernels.utf8 import (
+    utf8_decode_replace,
+    utf8_repl_counts,
+    utf8_to_codepoints_trusted,
     utf8_to_codepoints_with_repl,
 )
 from ultraviolet_spark.kernels.utf16 import utf16_to_codepoints
@@ -60,103 +71,85 @@ def _decode_fixed(data, offsets, encoding: str):
     raise ValueError(f"unsupported encoding {encoding!r} (one of {ENCODINGS})")
 
 
-def _take_rows(data, offsets, rows: np.ndarray):
-    """Gather a row subset into a compact (data, offsets) pair."""
-    lengths = np.diff(offsets)[rows]
-    new_off = np.zeros(len(rows) + 1, dtype=_I64)
-    np.cumsum(lengths, out=new_off[1:])
-    out = np.empty(int(new_off[-1]), dtype=np.uint8)
-    if len(rows):
-        row_of = np.repeat(np.arange(len(rows), dtype=_I64), lengths)
-        local = np.arange(int(lengths.sum()), dtype=_I64) - np.repeat(new_off[:-1], lengths)
-        out[:] = data[offsets[:-1][rows][row_of] + local]
-    return out, new_off
+_WIDE_BOMS = ((BOM_16LE, "utf-16le"), (BOM_16BE, "utf-16be"),
+              (BOM_32LE, "utf-32le"), (BOM_32BE, "utf-32be"))
 
 
-def decode_auto(data: np.ndarray, offsets: np.ndarray):
-    """BOM-sniffing decode: per-row BOM picks the encoding (stripped);
-    rows without a BOM decode as UTF-8.  Returns
-    (cp, cp_offsets, n_repl, bom_id_per_row)."""
+def decode_to_utf8(data: np.ndarray, offsets: np.ndarray):
+    """BOM-sniffing decode to UTF-8 with U+FFFD replacement — the
+    engine's one decode.  The per-row BOM picks the encoding and is
+    stripped; rows without a BOM are UTF-8.  Returns
+    (u8, u8_offsets, n_repl, bom_id_per_row).
+
+    UTF-8 rows are validated once; clean ones pass through as they are
+    and only rows that need U+FFFD go through the repair splice.
+    UTF-16/32 rows decode to codepoints and re-encode, as a subset.  A
+    batch with no BOM and no error comes back as the input buffer
+    itself (no copy), so callers must not write into the result."""
     n = len(offsets) - 1
+    total = int(offsets[-1])
     bom = detect_bom(data, offsets)
-    # Whole-batch fast path: no BOM anywhere (the dominant web case) →
-    # decode in place with zero gather/reassembly copies.
-    if n and not bom.any():
-        cp, cpo, n_repl = _decode_fixed(data, offsets, "utf-8")
-        return cp, cpo, n_repl, bom
+    n_repl = np.zeros(n, dtype=_I64)
+    no_bom = not bom.any()
+    if no_bom and (not total or int(data[:total].max()) < 0x80):
+        return data[:total], offsets, n_repl, bom      # all-ASCII batch
 
-    # Strip BOM: advance row starts by the BOM length.
-    strip = _BOM_LEN[bom]
-    enc_of_bom = {
-        BOM_NONE: "utf-8", BOM_UTF8: "utf-8",
-        BOM_16LE: "utf-16le", BOM_16BE: "utf-16be",
-        BOM_32LE: "utf-32le", BOM_32BE: "utf-32be",
-    }
-    cp_parts: list[tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]] = []
-    for bid, enc in enc_of_bom.items():
+    starts = offsets[:-1] + _BOM_LEN[bom]
+    lens = offsets[1:] - starts
+    # (rows, source buffer, row starts in it, row lengths) — where each
+    # output row's bytes live; one stitch at the end puts them in order
+    parts = []
+    rows = np.flatnonzero(bom <= BOM_UTF8)
+    if len(rows):
+        buf, buf_starts = gather_rows(data, starts[rows], lens[rows], sentinel=True)
+        nr = utf8_repl_counts(buf, buf_starts)
+        del buf
+        if no_bom and not nr.any():
+            return data[:total], offsets, n_repl, bom  # clean UTF-8 batch
+        n_repl[rows] = nr
+        clean = rows[nr == 0]
+        parts.append((clean, data, starts[clean], lens[clean]))
+        bad = rows[nr > 0]
+        if len(bad):
+            rep, rep_off, _ = utf8_decode_replace(
+                *gather_rows(data, starts[bad], lens[bad]))
+            parts.append((bad, rep, rep_off[:-1], np.diff(rep_off)))
+    for bid, enc in _WIDE_BOMS:
         rows = np.flatnonzero(bom == bid)
         if not len(rows):
             continue
-        sub_off = np.zeros(len(rows) + 1, dtype=_I64)
-        # stripped row views; gather index = arange + per-byte delta of
-        # (src start − dst start) — ONE repeat, not three
-        starts = offsets[:-1][rows] + strip[rows]
-        lens = offsets[1:][rows] - starts
-        np.cumsum(lens, out=sub_off[1:])
-        total_sub = int(sub_off[-1])
-        if not total_sub:
-            sub = np.empty(0, dtype=np.uint8)
-        elif total_sub // len(rows) >= 256:
-            # KB-sized rows: bounded per-row slice memcpys beat the
-            # byte-granular fancy gather ~35× (8-byte indices dominate
-            # the traffic; same trick as utf16.py's unit buffer)
-            sub = np.empty(total_sub, dtype=np.uint8)
-            for j in range(len(rows)):
-                d0 = int(sub_off[j])
-                s0 = int(starts[j])
-                nb = int(lens[j])
-                sub[d0:d0 + nb] = data[s0:s0 + nb]
-        else:
-            idx = (np.arange(total_sub, dtype=_I64)
-                   + np.repeat(starts - sub_off[:-1], lens))
-            sub = data[idx]
-        cp, cpo, nr = _decode_fixed(sub, sub_off, enc)
-        cp_parts.append((rows, cp, cpo, nr))
+        cp, cpo, n_repl[rows] = _decode_fixed(
+            *gather_rows(data, starts[rows], lens[rows]), enc)
+        u8, u8o = _enc.codepoints_to_utf8(cp, cpo)
+        parts.append((rows, u8, u8o[:-1], np.diff(u8o)))
 
-    # Reassemble in original row order.
-    row_cp_counts = np.zeros(n, dtype=_I64)
-    n_repl = np.zeros(n, dtype=_I64)
-    for rows, cp, cpo, nr in cp_parts:
-        row_cp_counts[rows] = np.diff(cpo)
-        n_repl[rows] = nr
     out_off = np.zeros(n + 1, dtype=_I64)
-    np.cumsum(row_cp_counts, out=out_off[1:])
-    out_cp = np.empty(int(out_off[-1]), dtype=np.uint32)
-    for rows, cp, cpo, nr in cp_parts:
-        counts = np.diff(cpo)
-        tot = int(counts.sum())
-        if not tot:
-            continue
-        if tot // len(rows) >= 64:
-            # per-row slice memcpys (see the gather above; ~10× here —
-            # 4-byte payload under 8-byte scatter indices)
-            dst0 = out_off[:-1][rows]
-            for j in range(len(rows)):
-                d0 = int(dst0[j])
-                s0 = int(cpo[j])
-                c = int(counts[j])
-                out_cp[d0:d0 + c] = cp[s0:s0 + c]
-        else:
-            idx = (np.arange(tot, dtype=_I64)
-                   + np.repeat(out_off[:-1][rows] - cpo[:-1], counts))
-            out_cp[idx] = cp
-    return out_cp, out_off, n_repl, bom
+    out_lens = out_off[1:]
+    for rows, _, _, row_lens in parts:
+        out_lens[rows] = row_lens
+    np.cumsum(out_lens, out=out_lens)
+    out = np.empty(int(out_off[-1]), dtype=np.uint8)
+    for rows, src, src_starts, row_lens in parts:
+        copy_rows(out, out_off[rows], src, src_starts, row_lens)
+    return out, out_off, n_repl, bom
+
+
+def decode_auto(data: np.ndarray, offsets: np.ndarray):
+    """``decode_to_utf8`` as codepoints: (cp, cp_offsets, n_repl,
+    bom_id_per_row).  The UTF-8 it decodes is well-formed by
+    construction, so the codepoints come from the trusted decoder."""
+    u8, u8o, n_repl, bom = decode_to_utf8(data, offsets)
+    cp, cpo = utf8_to_codepoints_trusted(u8, u8o)
+    return cp, cpo, n_repl, bom
 
 
 def transcode(data: np.ndarray, offsets: np.ndarray, src: str, dst: str):
-    """any→any among ENCODINGS via the codepoint pivot.
-    Returns (out_data, out_offsets, n_repl)."""
+    """any→any among ENCODINGS (``src`` may also be "auto": BOM-sniffing,
+    see ``decode_to_utf8``).  Returns (out_data, out_offsets, n_repl)."""
     if src == "auto":
+        if dst == "utf-8":
+            out, oo, n_repl, _ = decode_to_utf8(data, offsets)
+            return out, oo, n_repl
         cp, cpo, n_repl, _ = decode_auto(data, offsets)
     else:
         cp, cpo, n_repl = _decode_fixed(data, offsets, src)

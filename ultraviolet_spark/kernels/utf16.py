@@ -4,7 +4,7 @@ Mirrors CPython ``bytes.decode('utf-16-le'|'utf-16-be', 'replace')``:
 well-formed surrogate pairs combine; lone surrogates and an odd
 trailing byte each become one U+FFFD.  A BOM is NOT stripped here
 (U+FEFF decodes as content, exactly like the endian-explicit CPython
-codecs); BOM handling lives in transcode.decode_auto.
+codecs); BOM handling lives in transcode.decode_to_utf8.
 """
 
 from __future__ import annotations

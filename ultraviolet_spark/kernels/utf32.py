@@ -3,7 +3,7 @@
 Mirrors CPython ``bytes.decode('utf-32-le'|'utf-32-be', 'replace')``:
 units > U+10FFFF or in the surrogate range become one U+FFFD; a
 trailing partial unit (1–3 bytes) becomes one U+FFFD.  BOM is content
-(U+FEFF) here; auto-detection lives in transcode.decode_auto.
+(U+FEFF) here; auto-detection lives in transcode.decode_to_utf8.
 """
 
 from __future__ import annotations

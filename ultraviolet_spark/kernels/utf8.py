@@ -180,21 +180,32 @@ def _analyze_dense(b: np.ndarray, ascii_: np.ndarray | None = None):
     return _analyze_dense_one(b, ascii_)
 
 
-def _analyze_dense_chunked(b: np.ndarray, ascii_: np.ndarray | None):
-    n = len(b)
+def _chunks(n: int, analyze):
+    """Yield (i0, i1, masks of [i0, i1)) over ``_DENSE_CHUNK`` chunks of
+    an n-byte buffer; ``analyze(lo, hi)`` classifies [lo, hi), which
+    carries the 4-byte halo."""
     halo = 4
-    keys = ("ascii", "v2", "v3", "v4", "covered", "bad", "start", "fffd")
-    out = {k: np.empty(n, dtype=bool) for k in keys}
-    out["span"] = np.empty(n, dtype=np.int8)
     for i0 in range(0, n, _DENSE_CHUNK):
         i1 = min(i0 + _DENSE_CHUNK, n)
         lo = max(0, i0 - halo)
-        hi = min(n, i1 + halo)
-        sub = _analyze_dense_one(
-            b[lo:hi], None if ascii_ is None else ascii_[lo:hi])
+        sub = analyze(lo, min(n, i1 + halo))
         a = i0 - lo
+        yield i0, i1, {k: v[a:a + (i1 - i0)] for k, v in sub.items()}
+
+
+def _analyze_dense_chunked(b: np.ndarray, ascii_: np.ndarray | None):
+    n = len(b)
+    keys = ("ascii", "v2", "v3", "v4", "covered", "bad", "start", "fffd")
+    out = {k: np.empty(n, dtype=bool) for k in keys}
+    out["span"] = np.empty(n, dtype=np.int8)
+
+    def analyze(lo, hi):
+        return _analyze_dense_one(
+            b[lo:hi], None if ascii_ is None else ascii_[lo:hi])
+
+    for i0, i1, sub in _chunks(n, analyze):
         for k, dst in out.items():
-            dst[i0:i1] = sub[k][a:a + (i1 - i0)]
+            dst[i0:i1] = sub[k]
     return out
 
 
@@ -267,6 +278,19 @@ def _per_row_counts(mask: np.ndarray, row_starts: np.ndarray) -> np.ndarray:
     if not mask.any():  # clean batch (the common case for fffd counts)
         return np.zeros(len(row_starts) - 1, dtype=_I64)
     return np.add.reduceat(mask, row_starts[:-1], dtype=_I64)
+
+
+def utf8_repl_counts(b: np.ndarray, row_starts: np.ndarray) -> np.ndarray:
+    """Per-row U+FFFD count of a sentinel-padded buffer (``pad_rows``
+    layout), without ``_analyze``'s full-size masks: the buffer is
+    classified one ``_DENSE_CHUNK`` at a time (sparse or dense, as
+    ``_analyze`` picks per chunk) and only U+FFFD positions are kept, so
+    the temporaries stay chunk-sized whatever the batch size."""
+    if not len(b) or int(b.max()) < 0x80:
+        return np.zeros(len(row_starts) - 1, dtype=_I64)
+    pos = [np.flatnonzero(m["fffd"]) + i0
+           for i0, _, m in _chunks(len(b), lambda lo, hi: _analyze(b[lo:hi]))]
+    return np.diff(np.searchsorted(np.concatenate(pos), row_starts)).astype(_I64)
 
 
 def utf8_validate(data: np.ndarray, offsets: np.ndarray):
@@ -365,6 +389,37 @@ def _codepoints_core(b8: np.ndarray, row_starts: np.ndarray, m: dict):
     # index-gather extraction: ~2× faster than boolean-mask extraction
     # at this density (numpy bool fancy-indexing is not vectorized)
     return cp[np.flatnonzero(emit)], out_off
+
+
+def utf8_to_codepoints_trusted(data: np.ndarray, offsets: np.ndarray):
+    """Well-formed UTF-8 → (cp u32, cp_offsets i64[n+1]), no validation.
+
+    Only for bytes that are well-formed by construction: the output of
+    ``transcode.decode_to_utf8`` and text extracted from it (extraction
+    removes whole ``<``…``>`` spans and emits only scalar values).  Leads
+    are the bytes outside 0x80..0xBF; codepoints are assembled at the
+    non-ASCII leads only.  Ill-formed input is not detected: it decodes
+    to wrong codepoints, or fails on a lead truncated at the buffer end.
+    """
+    total = int(offsets[-1])
+    b = data[:total]
+    if not total or int(b.max()) < 0x80:
+        return b.astype(np.uint32), offsets.astype(_I64)
+    cp = b.astype(np.uint32)
+    multi = np.flatnonzero(b >= 0xC0)
+    lead = cp[multi]
+    for lo, hi, mask, n_cont in ((0xC0, 0xE0, 0x1F, 1), (0xE0, 0xF0, 0x0F, 2),
+                                 (0xF0, 0x100, 0x07, 3)):
+        p = multi[(lead >= lo) & (lead < hi)]
+        if not len(p):
+            continue
+        v = cp[p] & mask
+        for k in range(1, n_cont + 1):
+            v = (v << 6) | (cp[p + k] & 0x3F)
+        cp[p] = v                      # leads only: continuations stay intact
+    # continuation bytes are exactly the int8 values below -64
+    leads = np.flatnonzero(b.view(np.int8) >= -64)
+    return cp[leads], np.searchsorted(leads, offsets).astype(_I64)
 
 
 def utf8_to_codepoints(data: np.ndarray, offsets: np.ndarray):

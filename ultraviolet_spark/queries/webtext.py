@@ -80,9 +80,7 @@ def q55(spark, sf_dir):
         _pd_binary_to_buffers,
         _string_out,
     )
-    from ultraviolet_spark.kernels.encode import codepoints_to_utf8
-    from ultraviolet_spark.kernels.utf16 import utf16_to_codepoints
-    from ultraviolet_spark.kernels.utf32 import utf32_to_codepoints
+    from ultraviolet_spark.kernels.transcode import transcode
 
     rows = [(cid, enc, bytearray(raw)) for cid, enc, raw in C.WIDE_CASES]
     df = spark.createDataFrame(rows, "case_id string, enc string, raw binary")
@@ -92,12 +90,9 @@ def q55(spark, sf_dir):
             outs = []
             for enc, grp in pdf.groupby("enc"):  # ≤4 codec groups, not per-row
                 data, offsets, nulls = _pd_binary_to_buffers(grp["raw"])
-                be = enc.endswith("be")
-                if enc.startswith("utf-16"):
-                    cp, cpo, nr = utf16_to_codepoints(data, offsets, big_endian=be)
-                else:
-                    cp, cpo, nr = utf32_to_codepoints(data, offsets, big_endian=be)
-                u8, u8o = codepoints_to_utf8(cp, cpo)
+                # CPython codec name ("utf-16-le") → kernel name ("utf-16le")
+                src = "".join(enc.rsplit("-", 1))
+                u8, u8o, nr = transcode(data, offsets, src, "utf-8")
                 outs.append(pd.DataFrame({
                     "case_id": grp["case_id"].to_numpy(),
                     "decoded": _string_out(u8, u8o, nulls).to_numpy(),
