@@ -24,7 +24,7 @@ from ultraviolet_spark.kernels.classify import (
 )
 from ultraviolet_spark.kernels.transcode import decode_auto, decode_to_utf8
 from ultraviolet_spark.kernels.utf8 import (
-    utf8_repl_counts,
+    utf8_row_errors,
     utf8_to_codepoints,
     utf8_to_codepoints_trusted,
     utf8_validate,
@@ -186,15 +186,15 @@ def test_utf8_repl_counts_equal_validate_across_chunks(rows):
     """Chunked U+FFFD counting agrees with utf8_validate, including
     ill-formed spans that straddle a chunk boundary (4-byte halo)."""
     import ultraviolet_spark.kernels.utf8 as U
-    from ultraviolet_spark.kernels.buffers import pad_rows
+    from ultraviolet_spark.kernels.buffers import gather_rows
 
     data, offsets = rows_from_list(rows)
     _, _, want = utf8_validate(data, offsets)
-    b, row_starts = pad_rows(data, offsets, pad=1, value=0)
+    b, row_starts = gather_rows(data, offsets[:-1], np.diff(offsets), sentinel=True)
     old = U._DENSE_CHUNK
     try:
         for chunk in (old, 16):
             U._DENSE_CHUNK = chunk
-            np.testing.assert_array_equal(utf8_repl_counts(b, row_starts), want)
+            np.testing.assert_array_equal(utf8_row_errors(b, row_starts)[0], want)
     finally:
         U._DENSE_CHUNK = old

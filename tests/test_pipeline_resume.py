@@ -96,3 +96,28 @@ def test_code_fingerprint_stable_with_nested_lambdas():
     ns2: dict = {}
     exec(compile(src.replace("v + sum(xs)", "v - sum(xs)"), "<stage>", "exec"), ns2)
     assert _code_fingerprint(ns2["build"].__code__) != fps[0]
+
+
+def test_upstream_code_change_cascades_downstream(spark, pages_path, tmp_path,
+                                                  monkeypatch):
+    """A new text_extracted build (same inputs) must not let features
+    and features_enriched resume snapshots built from the old one: each
+    stage chains on the upstream stage's resume key, which holds the
+    build's code version."""
+    from ultraviolet_spark.plans import snapshots
+
+    pages = spark.read.parquet(pages_path)
+    wh = str(tmp_path / "wh")
+    run_checkpointed_pipeline(spark, pages, wh, inputs_key=pages_path)
+
+    real = snapshots._code_fingerprint
+
+    def extract_build_changed(code):
+        fp = real(code)
+        return fp + "-v2" if "extract_stage" in code.co_names else fp
+
+    monkeypatch.setattr(snapshots, "_code_fingerprint", extract_build_changed)
+    _, r = run_checkpointed_pipeline(spark, pages, wh, inputs_key=pages_path)
+    assert r == {"text_extracted": False, "features": False,
+                 "features_enriched": False}
+

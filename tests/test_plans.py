@@ -130,6 +130,28 @@ def test_flagship_plan_one_exchange_one_python_node(spark, pages_path):
     assert nodes.count("Python") == 1, nodes
 
 
+def test_features_over_text_extracted_snapshot_no_python_node(
+        spark, pages_path, tmp_path):
+    """The text_extracted snapshot carries text_len and cp_hist from the
+    fused extract pass, so the features built over it add no Python
+    node."""
+    from ultraviolet_spark.pipeline import (
+        feature_vector,
+        run_checkpointed_pipeline,
+    )
+    from ultraviolet_spark.plans.snapshots import ParquetSnapshotFormat
+
+    wh = str(tmp_path / "wh")
+    run_checkpointed_pipeline(spark, spark.read.parquet(pages_path), wh,
+                              inputs_key=pages_path)
+    fmt = ParquetSnapshotFormat(wh)
+    te = fmt.read(spark, "text_extracted",
+                  fmt.snapshots("text_extracted")[-1].snapshot_id)
+    out = feature_vector(te)
+    out.collect()
+    assert "Python" not in _executed_nodes(out)
+
+
 def test_whole_stage_codegen_on_relational_core(spark, tables):
     # AQE defers codegen planning until runtime; disable it to inspect
     spark.conf.set("spark.sql.adaptive.enabled", "false")

@@ -10,6 +10,8 @@ from __future__ import annotations
 
 import numpy as np
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 
 from ultraviolet_spark.kernels.buffers import list_from_rows, rows_from_list
 from ultraviolet_spark.kernels.utf8 import (
@@ -175,3 +177,37 @@ def test_sparse_path_conformance_cases():
         want_repl = want.count("�") - (pad + raw + pad).decode("utf-8", "ignore").count("�")
         assert got.decode("utf-8") == want, cid
         assert nr == want_repl, cid
+
+
+_ROW = st.lists(
+    st.one_of(st.binary(max_size=12),
+              st.text(max_size=6).map(lambda t: t.encode("utf-8", "surrogatepass")),
+              st.sampled_from([b"\x80", b"\xc3", b"\xe4\xb8", b"\xed\xa0\x80",
+                               b"\xf0\x9f\x92", b"\xf4\x90\x80\x80", b"\xff"])),
+    max_size=8).map(b"".join)
+
+
+@settings(max_examples=300, deadline=None)
+@given(st.lists(_ROW, min_size=1, max_size=20), st.sampled_from([5, 16, 64]))
+def test_validate_multirow_matches_cpython_across_chunks(rows, chunk):
+    """Multi-row ``utf8_validate`` against CPython: the strict error's
+    ``start`` and the replace count, per row, with chunks small enough
+    that U+FFFD positions and row boundaries straddle them."""
+    import ultraviolet_spark.kernels.utf8 as U
+
+    data, offsets = rows_from_list(rows)
+    old = U._DENSE_CHUNK
+    U._DENSE_CHUNK = chunk
+    try:
+        valid, err_off, n_err = utf8_validate(data, offsets)
+    finally:
+        U._DENSE_CHUNK = old
+    for i, raw in enumerate(rows):
+        try:
+            raw.decode("utf-8")
+            want_off = -1
+        except UnicodeDecodeError as e:
+            want_off = e.start
+        assert err_off[i] == want_off, (raw, err_off[i], want_off)
+        assert bool(valid[i]) == (want_off == -1)
+        assert n_err[i] == _expected(raw)[1], raw

@@ -11,9 +11,17 @@ Two surfaces (SURVEY.md §2.9):
   text is extracted from those bytes, and the optional features read
   the extracted UTF-8 with the trusted decoder.
 
-* scalar ``pandas_udf`` wrappers (utf8_valid_udf, …) for use inside
-  ordinary DataFrame expressions; these cross through pandas Series
-  but all byte work happens in the kernels.
+* scalar ``pandas_udf`` wrappers (utf8_decode_udf, utf8_info_udf,
+  cp_class_hist_udf, …) for use inside ordinary DataFrame expressions;
+  these cross through pandas Series but all byte work happens in the
+  same kernels: UTF-8 input is validated once by
+  ``transcode.utf8_repair`` (the fused stage's UTF-8 branch, without
+  BOM sniffing, since a JVM string's leading U+FEFF is content) and
+  histograms come from ``classify.utf8_class_histogram``.
+
+The pipeline itself uses only the first surface: its features ride the
+fused pass (``with_features=True``) in the flagship and the
+checkpointed stages alike.
 """
 
 from __future__ import annotations
@@ -33,21 +41,13 @@ from ultraviolet_spark.kernels.buffers import (
     binary_to_offsets,
     offsets_to_pyarrow_string,
 )
-from ultraviolet_spark.kernels.classify import (
-    K,
-    codepoint_class_histogram,
-    utf8_class_histogram,
-)
+from ultraviolet_spark.kernels.classify import K, utf8_class_histogram
 from ultraviolet_spark.kernels.extract import extract_text
 from ultraviolet_spark.kernels.transcode import (
     BOM_NAMES,
     decode_to_utf8,
     transcode,
-)
-from ultraviolet_spark.kernels.utf8 import (
-    utf8_decode_replace,
-    utf8_to_codepoints,
-    utf8_validate,
+    utf8_repair,
 )
 
 TEXT_EXTRACTED_FIELDS = [
@@ -75,19 +75,12 @@ def _string_out(data, offsets, null_mask=None) -> pd.Series:
     return offsets_to_pyarrow_string(data, offsets, null_mask).to_pandas()
 
 
-@pandas_udf(T.BooleanType())
-def utf8_valid_udf(s: pd.Series) -> pd.Series:
-    data, offsets, nulls = _pd_binary_to_buffers(s)
-    valid, _, _ = utf8_validate(data, offsets)
-    return pd.Series(np.where(nulls, None, valid))
-
-
 @pandas_udf(T.StringType())
 def utf8_decode_udf(s: pd.Series) -> pd.Series:
     """binary → text (U+FFFD replace policy). All decode in numpy — the
     JVM decoder is never allowed to define semantics (SURVEY.md §2.1)."""
     data, offsets, nulls = _pd_binary_to_buffers(s)
-    out, oo, _ = utf8_decode_replace(data, offsets)
+    out, oo, _, _ = utf8_repair(data, offsets)
     return _string_out(out, oo, nulls)
 
 
@@ -102,12 +95,11 @@ UTF8_INFO_SCHEMA = T.StructType([
 @pandas_udf(UTF8_INFO_SCHEMA)
 def utf8_info_udf(s: pd.Series) -> pd.DataFrame:
     """binary → (valid, first error byte offset, U+FFFD count, decoded
-    text) in one kernel pass — the driver-visible conformance surface."""
+    text) from one validation — the conformance surface q40 checks."""
     data, offsets, nulls = _pd_binary_to_buffers(s)
-    valid, err_off, _ = utf8_validate(data, offsets)
-    out, oo, n_repl = utf8_decode_replace(data, offsets)
+    out, oo, n_repl, err_off = utf8_repair(data, offsets)
     return pd.DataFrame({
-        "valid": pd.Series(np.where(nulls, None, valid), dtype=object),
+        "valid": pd.Series(np.where(nulls, None, n_repl == 0), dtype=object),
         "error_offset": err_off.astype(np.int64),
         "n_repl": n_repl.astype(np.int64),
         "decoded": _string_out(out, oo, nulls),
@@ -134,10 +126,13 @@ def extract_text_udf(s: pd.Series) -> pd.Series:
 
 @pandas_udf(T.ArrayType(T.LongType()))
 def cp_class_hist_udf(s: pd.Series) -> pd.Series:
+    """text → codepoint class histogram.  JVM strings can hold
+    ill-formed UTF-8, so the bytes are validated (and repaired) first;
+    a leading U+FEFF is content, not a BOM."""
     arr = pa.array(s, type=pa.large_string())
     data, offsets, nulls = binary_to_offsets(arr.cast(pa.large_binary()))
-    cp, cpo = utf8_to_codepoints(data, offsets)
-    hist = codepoint_class_histogram(cp, cpo)
+    u8, u8o, _, _ = utf8_repair(data, offsets)
+    _, hist = utf8_class_histogram(u8, u8o)
     out = pa.FixedSizeListArray.from_arrays(pa.array(hist.ravel(), type=pa.int64()), K)
     res = out.to_pandas()
     if nulls.any():

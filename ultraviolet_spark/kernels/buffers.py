@@ -104,46 +104,6 @@ def list_from_rows(data: np.ndarray, offsets: np.ndarray) -> list[bytes]:
     return [raw[offsets[i]: offsets[i + 1]] for i in range(len(offsets) - 1)]
 
 
-def pad_rows(
-    data: np.ndarray, offsets: np.ndarray, pad: int, value: int = 0
-) -> tuple[np.ndarray, np.ndarray]:
-    """Insert ``pad`` sentinel bytes of ``value`` after every row.
-
-    Returns ``(padded_data, padded_row_starts)`` where row *i* of the
-    padded buffer starts at ``padded_row_starts[i]`` and the sentinels
-    sit at ``padded_row_starts[i+1] - pad .. padded_row_starts[i+1]``.
-    ``padded_row_starts`` has ``n_rows + 1`` entries (the last one is
-    ``len(padded_data)``).  Sentinels break multi-byte sequences at row
-    boundaries so the whole batch decodes in one vectorized pass.
-    """
-    n = len(offsets) - 1
-    total = int(offsets[-1])
-    padded = np.full(total + pad * n, value, dtype=_U8)
-    if total:
-        if n and total // n >= 256:
-            # KB-sized rows: n bounded slice-memcpys (≈µs each) beat the
-            # three full-length index arrays of the scatter form — this
-            # loop is per-ROW (bounded by Arrow batch size), not per-byte
-            off = offsets
-            for i in range(n):
-                s, e = off[i], off[i + 1]
-                ps = s + pad * i
-                padded[ps:ps + (e - s)] = data[s:e]
-        else:
-            # many tiny rows: vectorized scatter.  int32 indices are ~2×
-            # faster, but only safe while the PADDED buffer stays under
-            # 2**31 — guard like encode.py does rather than rely on the
-            # "Arrow batch < 2 GiB" convention (silent wraparound would
-            # corrupt output, ADVICE r2).
-            idx_t = np.int32 if total + pad * n < 2**31 else _I64
-            idx = np.arange(total, dtype=idx_t)
-            idx += pad * np.repeat(np.arange(n, dtype=idx_t),
-                                   np.diff(offsets).astype(idx_t))
-            padded[idx] = data[:total]
-    padded_row_starts = offsets + pad * np.arange(n + 1, dtype=_I64)
-    return padded, padded_row_starts
-
-
 def copy_rows(dst: np.ndarray, dst_starts: np.ndarray, src: np.ndarray,
               src_starts: np.ndarray, lens: np.ndarray) -> None:
     """dst[dst_starts[j]:+lens[j]] = src[src_starts[j]:+lens[j]] for every
@@ -154,7 +114,7 @@ def copy_rows(dst: np.ndarray, dst_starts: np.ndarray, src: np.ndarray,
     if total // len(lens) >= 256:
         # KB-sized rows: bounded per-row slice memcpys beat the
         # byte-granular fancy gather ~35× (8-byte indices dominate the
-        # traffic; same trick as pad_rows)
+        # traffic)
         for d0, s0, nb in zip(dst_starts.tolist(), src_starts.tolist(),
                               lens.tolist()):
             dst[d0:d0 + nb] = src[s0:s0 + nb]
@@ -170,8 +130,9 @@ def copy_rows(dst: np.ndarray, dst_starts: np.ndarray, src: np.ndarray,
 def gather_rows(src: np.ndarray, starts: np.ndarray, lens: np.ndarray,
                 sentinel: bool = False) -> tuple[np.ndarray, np.ndarray]:
     """Rows src[starts[j]:+lens[j]] packed into a fresh buffer, with one
-    0x00 byte after each when ``sentinel`` (the ``pad_rows`` layout).
-    Returns (buf, row_starts[n+1])."""
+    0x00 byte after each when ``sentinel``: the layout the UTF-8
+    classifier runs on, where the sentinel breaks every multi-byte
+    sequence at a row boundary.  Returns (buf, row_starts[n+1])."""
     row_starts = np.zeros(len(lens) + 1, dtype=_I64)
     np.cumsum(lens + sentinel, out=row_starts[1:])
     buf = np.empty(int(row_starts[-1]), dtype=np.uint8)

@@ -4,9 +4,10 @@
 UTF-8 is the one decode pivot: `decode_to_utf8` sniffs each row's BOM,
 validates UTF-8 rows in place and repairs only the rows that need
 U+FFFD, and sends only UTF-16/32 rows through codepoints.
-`decode_auto` and `transcode(src="auto")` ride on it; fixed-encoding
-transcodes go through the per-encoding codepoint decoders and
-encoders."""
+`utf8_repair` is its UTF-8 branch without BOM sniffing (the scalar
+UDFs' decode).  `decode_auto` and `transcode(src="auto")` ride on
+`decode_to_utf8`; fixed-encoding transcodes go through the
+per-encoding codepoint decoders and encoders."""
 
 from __future__ import annotations
 
@@ -16,7 +17,7 @@ from ultraviolet_spark.kernels import encode as _enc
 from ultraviolet_spark.kernels.buffers import copy_rows, gather_rows
 from ultraviolet_spark.kernels.utf8 import (
     utf8_decode_replace,
-    utf8_repl_counts,
+    utf8_row_errors,
     utf8_to_codepoints_trusted,
     utf8_to_codepoints_with_repl,
 )
@@ -75,54 +76,26 @@ _WIDE_BOMS = ((BOM_16LE, "utf-16le"), (BOM_16BE, "utf-16be"),
               (BOM_32LE, "utf-32le"), (BOM_32BE, "utf-32be"))
 
 
-def decode_to_utf8(data: np.ndarray, offsets: np.ndarray):
-    """BOM-sniffing decode to UTF-8 with U+FFFD replacement — the
-    engine's one decode.  The per-row BOM picks the encoding and is
-    stripped; rows without a BOM are UTF-8.  Returns
-    (u8, u8_offsets, n_repl, bom_id_per_row).
+def _utf8_parts(data: np.ndarray, starts: np.ndarray, lens: np.ndarray):
+    """UTF-8 rows data[starts[j]:+lens[j]], validated once.  Returns
+    (n_repl, error_offset, parts) with parts in ``_stitch`` form: clean
+    rows are views of ``data``, and only rows that need U+FFFD go
+    through the repair splice."""
+    buf, buf_starts = gather_rows(data, starts, lens, sentinel=True)
+    n_repl, err_off = utf8_row_errors(buf, buf_starts)
+    del buf
+    clean, bad = np.flatnonzero(n_repl == 0), np.flatnonzero(n_repl)
+    parts = [(clean, data, starts[clean], lens[clean])]
+    if len(bad):
+        rep, rep_off, _ = utf8_decode_replace(
+            *gather_rows(data, starts[bad], lens[bad]))
+        parts.append((bad, rep, rep_off[:-1], np.diff(rep_off)))
+    return n_repl, err_off, parts
 
-    UTF-8 rows are validated once; clean ones pass through as they are
-    and only rows that need U+FFFD go through the repair splice.
-    UTF-16/32 rows decode to codepoints and re-encode, as a subset.  A
-    batch with no BOM and no error comes back as the input buffer
-    itself (no copy), so callers must not write into the result."""
-    n = len(offsets) - 1
-    total = int(offsets[-1])
-    bom = detect_bom(data, offsets)
-    n_repl = np.zeros(n, dtype=_I64)
-    no_bom = not bom.any()
-    if no_bom and (not total or int(data[:total].max()) < 0x80):
-        return data[:total], offsets, n_repl, bom      # all-ASCII batch
 
-    starts = offsets[:-1] + _BOM_LEN[bom]
-    lens = offsets[1:] - starts
-    # (rows, source buffer, row starts in it, row lengths) — where each
-    # output row's bytes live; one stitch at the end puts them in order
-    parts = []
-    rows = np.flatnonzero(bom <= BOM_UTF8)
-    if len(rows):
-        buf, buf_starts = gather_rows(data, starts[rows], lens[rows], sentinel=True)
-        nr = utf8_repl_counts(buf, buf_starts)
-        del buf
-        if no_bom and not nr.any():
-            return data[:total], offsets, n_repl, bom  # clean UTF-8 batch
-        n_repl[rows] = nr
-        clean = rows[nr == 0]
-        parts.append((clean, data, starts[clean], lens[clean]))
-        bad = rows[nr > 0]
-        if len(bad):
-            rep, rep_off, _ = utf8_decode_replace(
-                *gather_rows(data, starts[bad], lens[bad]))
-            parts.append((bad, rep, rep_off[:-1], np.diff(rep_off)))
-    for bid, enc in _WIDE_BOMS:
-        rows = np.flatnonzero(bom == bid)
-        if not len(rows):
-            continue
-        cp, cpo, n_repl[rows] = _decode_fixed(
-            *gather_rows(data, starts[rows], lens[rows]), enc)
-        u8, u8o = _enc.codepoints_to_utf8(cp, cpo)
-        parts.append((rows, u8, u8o[:-1], np.diff(u8o)))
-
+def _stitch(n: int, parts):
+    """One output buffer from (rows, source buffer, row starts in it,
+    row lengths) parts that together cover rows 0..n-1."""
     out_off = np.zeros(n + 1, dtype=_I64)
     out_lens = out_off[1:]
     for rows, _, _, row_lens in parts:
@@ -131,7 +104,59 @@ def decode_to_utf8(data: np.ndarray, offsets: np.ndarray):
     out = np.empty(int(out_off[-1]), dtype=np.uint8)
     for rows, src, src_starts, row_lens in parts:
         copy_rows(out, out_off[rows], src, src_starts, row_lens)
-    return out, out_off, n_repl, bom
+    return out, out_off
+
+
+def utf8_repair(data: np.ndarray, offsets: np.ndarray):
+    """UTF-8 → well-formed UTF-8 with U+FFFD replacement, validated
+    once.  No BOM sniffing: a leading U+FEFF is content.  Returns
+    (u8, u8_offsets, n_repl, error_offset); error_offset is the row
+    offset of the first ill-formed byte, -1 when valid.  A clean batch
+    comes back as the input buffer itself (no copy), so callers must not
+    write into the result."""
+    n = len(offsets) - 1
+    total = int(offsets[-1])
+    if not total or int(data[:total].max()) < 0x80:   # all-ASCII batch
+        return data[:total], offsets, np.zeros(n, dtype=_I64), np.full(n, -1, dtype=_I64)
+    n_repl, err_off, parts = _utf8_parts(data, offsets[:-1], np.diff(offsets))
+    if not n_repl.any():
+        return data[:total], offsets, n_repl, err_off
+    return (*_stitch(n, parts), n_repl, err_off)
+
+
+def decode_to_utf8(data: np.ndarray, offsets: np.ndarray):
+    """BOM-sniffing decode to UTF-8 with U+FFFD replacement — the
+    engine's one decode.  The per-row BOM picks the encoding and is
+    stripped; rows without a BOM are UTF-8.  Returns
+    (u8, u8_offsets, n_repl, bom_id_per_row).
+
+    UTF-8 rows go through ``utf8_repair``'s validation and splice.
+    UTF-16/32 rows decode to codepoints and re-encode, as a subset.  A
+    batch with no BOM and no error comes back as the input buffer
+    itself (no copy), so callers must not write into the result."""
+    bom = detect_bom(data, offsets)
+    if not bom.any():
+        u8, u8o, n_repl, _ = utf8_repair(data, offsets)
+        return u8, u8o, n_repl, bom
+
+    n = len(offsets) - 1
+    n_repl = np.zeros(n, dtype=_I64)
+    starts = offsets[:-1] + _BOM_LEN[bom]
+    lens = offsets[1:] - starts
+    parts = []
+    rows = np.flatnonzero(bom <= BOM_UTF8)
+    if len(rows):
+        n_repl[rows], _, sub = _utf8_parts(data, starts[rows], lens[rows])
+        parts += [(rows[r], *rest) for r, *rest in sub]
+    for bid, enc in _WIDE_BOMS:
+        rows = np.flatnonzero(bom == bid)
+        if not len(rows):
+            continue
+        cp, cpo, n_repl[rows] = _decode_fixed(
+            *gather_rows(data, starts[rows], lens[rows]), enc)
+        u8, u8o = _enc.codepoints_to_utf8(cp, cpo)
+        parts.append((rows, u8, u8o[:-1], np.diff(u8o)))
+    return (*_stitch(n, parts), n_repl, bom)
 
 
 def decode_auto(data: np.ndarray, offsets: np.ndarray):

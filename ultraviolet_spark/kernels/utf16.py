@@ -47,7 +47,7 @@ def utf16_to_codepoints(data: np.ndarray, offsets: np.ndarray, *, big_endian: bo
     if total_bytes:
         if total_bytes // n >= 256:
             # KB-sized rows: n bounded slice-memcpys beat four full
-            # index arrays (same trick as buffers.pad_rows)
+            # index arrays (same trick as buffers.copy_rows)
             for i in range(n):
                 nb = int(nunits[i]) * 2
                 d0 = int(unit_starts[i]) * 2

@@ -22,7 +22,7 @@ from __future__ import annotations
 
 import numpy as np
 
-from ultraviolet_spark.kernels.buffers import pad_rows
+from ultraviolet_spark.kernels.buffers import gather_rows
 
 _U8 = np.uint8
 _I64 = np.int64
@@ -280,50 +280,57 @@ def _per_row_counts(mask: np.ndarray, row_starts: np.ndarray) -> np.ndarray:
     return np.add.reduceat(mask, row_starts[:-1], dtype=_I64)
 
 
-def utf8_repl_counts(b: np.ndarray, row_starts: np.ndarray) -> np.ndarray:
-    """Per-row U+FFFD count of a sentinel-padded buffer (``pad_rows``
-    layout), without ``_analyze``'s full-size masks: the buffer is
+def utf8_row_errors(b: np.ndarray, row_starts: np.ndarray):
+    """The engine's one UTF-8 validation, on a sentinel-padded buffer
+    (``gather_rows(…, sentinel=True)`` layout).  Returns (n_repl: i64[n],
+    error_offset: i64[n]): the U+FFFD count per row and the row offset
+    of its first ill-formed byte (-1 when valid).  The buffer is
     classified one ``_DENSE_CHUNK`` at a time (sparse or dense, as
     ``_analyze`` picks per chunk) and only U+FFFD positions are kept, so
-    the temporaries stay chunk-sized whatever the batch size."""
+    the temporaries stay chunk-sized whatever the batch size.  A row's
+    first ill-formed byte always starts a U+FFFD span, so its offset is
+    the row's first U+FFFD position."""
+    n = len(row_starts) - 1
     if not len(b) or int(b.max()) < 0x80:
-        return np.zeros(len(row_starts) - 1, dtype=_I64)
-    pos = [np.flatnonzero(m["fffd"]) + i0
-           for i0, _, m in _chunks(len(b), lambda lo, hi: _analyze(b[lo:hi]))]
-    return np.diff(np.searchsorted(np.concatenate(pos), row_starts)).astype(_I64)
+        return np.zeros(n, dtype=_I64), np.full(n, -1, dtype=_I64)
+    pos = np.concatenate(
+        [np.flatnonzero(m["fffd"]) + i0
+         for i0, _, m in _chunks(len(b), lambda lo, hi: _analyze(b[lo:hi]))])
+    first = np.searchsorted(pos, row_starts)
+    n_repl = np.diff(first).astype(_I64)
+    err_off = np.full(n, -1, dtype=_I64)
+    bad = np.flatnonzero(n_repl)
+    err_off[bad] = pos[first[bad]] - row_starts[bad]
+    return n_repl, err_off
+
+
+def _padded(data: np.ndarray, offsets: np.ndarray):
+    """(buffer, row_starts) with a 0x00 sentinel after every row, so no
+    sequence or error span leaks across a row boundary."""
+    return gather_rows(data, offsets[:-1], np.diff(offsets), sentinel=True)
 
 
 def utf8_validate(data: np.ndarray, offsets: np.ndarray):
     """Strict validation. Returns (valid: bool[n], error_offset: i64[n],
     n_errors: i64[n]); error_offset = -1 when valid (byte offset of the
     first ill-formed byte otherwise)."""
-    b, row_starts = pad_rows(data, offsets, pad=1, value=0)
-    m = _analyze(b)
-    n_err = _per_row_counts(m["fffd"], row_starts)
-    valid = n_err == 0
-    # First bad byte per row: min over row ranges (sentinel is never bad).
-    idx = np.where(m["bad"], np.arange(len(b), dtype=_I64), len(b))
-    if len(row_starts) > 1:
-        first = np.minimum.reduceat(idx, row_starts[:-1])
-    else:
-        first = np.empty(0, dtype=_I64)
-    err_off = np.where(valid, -1, first - row_starts[:-1])
-    return valid, err_off, n_err
+    n = len(offsets) - 1
+    total = int(offsets[-1])
+    if not total or int(data[:total].max()) < 0x80:  # all-ASCII: no copy
+        return np.ones(n, dtype=bool), np.full(n, -1, dtype=_I64), np.zeros(n, dtype=_I64)
+    n_err, err_off = utf8_row_errors(*_padded(data, offsets))
+    return n_err == 0, err_off, n_err
 
 
 def utf8_decode_replace(data: np.ndarray, offsets: np.ndarray):
     """UTF-8 → UTF-8 with ill-formed maximal subparts replaced by U+FFFD.
 
-    Well-formed spans are splice-copied (no codepoint round-trip);
-    the all-ASCII fast path is a plain copy.  Returns
+    Well-formed spans are splice-copied (no codepoint round-trip).  Meant
+    for rows already known to need U+FFFD (``transcode.utf8_repair``
+    sends only those), so there is no clean-batch fast path.  Returns
     (out_data, out_offsets, n_repl: i64[n]).
     """
-    n = len(offsets) - 1
-    total = int(offsets[-1])
-    if total == 0 or bool(np.all(data[:total] < 0x80)):
-        return data[:total].copy(), offsets.copy(), np.zeros(n, dtype=_I64)
-
-    b, row_starts = pad_rows(data, offsets, pad=1, value=0)
+    b, row_starts = _padded(data, offsets)
     m = _analyze(b)
     sentinel = np.zeros(len(b), dtype=bool)
     sentinel[row_starts[1:] - 1] = True
@@ -442,7 +449,7 @@ def utf8_to_codepoints_with_repl(data: np.ndarray, offsets: np.ndarray):
         return np.empty(0, dtype=np.uint32), offsets.copy(), zeros
     if bool(np.all(data[:total] < 0x80)):  # ASCII fast path
         return data[:total].astype(np.uint32), offsets.copy(), zeros
-    b8, row_starts = pad_rows(data, offsets, pad=1, value=0)
+    b8, row_starts = _padded(data, offsets)
     m = _analyze(b8)
     cp, cpo = _codepoints_core(b8, row_starts, m)
     return cp, cpo, _per_row_counts(m["fffd"], row_starts)

@@ -39,6 +39,8 @@ from pyspark.sql.functions import pandas_udf
 from ultraviolet_spark.kernels import sbcs
 from ultraviolet_spark.kernels.buffers import (
     binary_to_offsets,
+    copy_rows,
+    gather_rows,
     offsets_to_pyarrow_string,
 )
 from ultraviolet_spark.kernels.encode import codepoints_to_utf8
@@ -154,7 +156,7 @@ def _decode_group(data: np.ndarray, offsets: np.ndarray, charset: str):
     bom = _BOM_OF.get(charset)
     if bom is not None and len(offsets) > 1:
         n = len(offsets) - 1
-        starts = offsets[:-1].copy()
+        starts = offsets[:-1]
         lens = np.diff(offsets)
         k = len(bom)
         has = lens >= k
@@ -166,15 +168,8 @@ def _decode_group(data: np.ndarray, offsets: np.ndarray, charset: str):
                 chk[has] = data[starts[has] + j] == b
                 pref &= chk
             if pref.any():
-                new_off = np.zeros(n + 1, dtype=_I64)
-                np.cumsum(lens - np.where(pref, k, 0), out=new_off[1:])
-                out = np.empty(int(new_off[-1]), dtype=np.uint8)
-                src0 = starts + np.where(pref, k, 0)
-                for j in range(n):  # bounded per-row slice memcpy
-                    d0 = int(new_off[j]); nb = int(new_off[j + 1] - d0)
-                    s0 = int(src0[j])
-                    out[d0:d0 + nb] = data[s0:s0 + nb]
-                data, offsets = out, new_off
+                cut = np.where(pref, k, 0)
+                data, offsets = gather_rows(data, starts + cut, lens - cut)
     if charset == "utf-8":
         from ultraviolet_spark.kernels.utf8 import utf8_to_codepoints_with_repl
         cp, cpo, _ = utf8_to_codepoints_with_repl(data, offsets)
@@ -208,14 +203,8 @@ def decode_with_charset_udf(html: pd.Series, charset: pd.Series) -> pd.Series:
     parts: list[tuple[np.ndarray, np.ndarray, np.ndarray]] = []
     for value in pd.unique(cs):
         rows = np.flatnonzero(cs == value)
-        lens = np.diff(offsets)[rows]
-        sub_off = np.zeros(len(rows) + 1, dtype=_I64)
-        np.cumsum(lens, out=sub_off[1:])
-        sub = np.empty(int(sub_off[-1]), dtype=np.uint8)
-        starts = offsets[:-1][rows]
-        for j in range(len(rows)):  # bounded per-row slice memcpy
-            d0 = int(sub_off[j]); nb = int(lens[j]); s0 = int(starts[j])
-            sub[d0:d0 + nb] = data[s0:s0 + nb]
+        sub, sub_off = gather_rows(data, offsets[:-1][rows],
+                                   np.diff(offsets)[rows])
         cp, cpo = _decode_group(sub, sub_off, str(value))
         row_counts[rows] = np.diff(cpo)
         parts.append((rows, cp, cpo))
@@ -224,11 +213,7 @@ def decode_with_charset_udf(html: pd.Series, charset: pd.Series) -> pd.Series:
     np.cumsum(row_counts, out=out_off[1:])
     out_cp = np.empty(int(out_off[-1]), dtype=np.uint32)
     for rows, cp, cpo in parts:
-        counts = np.diff(cpo)
-        dst0 = out_off[:-1][rows]
-        for j in range(len(rows)):
-            d0 = int(dst0[j]); c = int(counts[j]); s0 = int(cpo[j])
-            out_cp[d0:d0 + c] = cp[s0:s0 + c]
+        copy_rows(out_cp, out_off[:-1][rows], cp, cpo[:-1], np.diff(cpo))
     u8, u8o = codepoints_to_utf8(out_cp, out_off)
     return offsets_to_pyarrow_string(u8, u8o, nulls).to_pandas()
 
@@ -278,26 +263,16 @@ def repair_mojibake_udf(text: pd.Series) -> pd.DataFrame:
     if len(rows):
         # candidate rows are 1 byte per cp, so their byte runs in `b`
         # are exactly the cpo segments — gather them compactly
-        lens = counts[rows]
-        sub_off = np.zeros(len(rows) + 1, dtype=_I64)
-        np.cumsum(lens, out=sub_off[1:])
-        sub = np.empty(int(sub_off[-1]), dtype=np.uint8)
-        starts = cpo[:-1][rows]
-        for j in range(len(rows)):
-            d0 = int(sub_off[j]); nb = int(lens[j]); s0 = int(starts[j])
-            sub[d0:d0 + nb] = b[s0:s0 + nb]
-        valid, _, _ = utf8_validate(sub, sub_off)
+        valid, _, _ = utf8_validate(*gather_rows(b, cpo[:-1][rows], counts[rows]))
         repaired[rows[valid]] = True
 
     out_lens = np.where(repaired, counts, np.diff(offsets))
     out_off = np.zeros(n + 1, dtype=_I64)
     np.cumsum(out_lens, out=out_off[1:])
     out = np.empty(int(out_off[-1]), dtype=np.uint8)
-    src_start = np.where(repaired, cpo[:-1], offsets[:-1])
-    src_buf_fixed = repaired
-    for j in range(n):
-        d0 = int(out_off[j]); nb = int(out_lens[j]); s0 = int(src_start[j])
-        out[d0:d0 + nb] = (b if src_buf_fixed[j] else data)[s0:s0 + nb]
+    fixed, kept = np.flatnonzero(repaired), np.flatnonzero(~repaired)
+    copy_rows(out, out_off[fixed], b, cpo[fixed], counts[fixed])
+    copy_rows(out, out_off[kept], data, offsets[kept], out_lens[kept])
 
     return pd.DataFrame({
         "text_fixed": offsets_to_pyarrow_string(out, out_off, nulls)

@@ -10,6 +10,11 @@ partitioning); asof_join is one more window over the union of its two
 sides, and both sides keep that url partitioning, so it moves nothing.
 The whole flagship is one exchange and one Python node (the extract
 MapInArrow) — asserted in tests/test_plans.py.
+
+``run_checkpointed_pipeline`` snapshots the same three stages
+(text_extracted, features, features_enriched).  Its text_extracted
+snapshot already holds ``text_len`` and ``cp_hist`` from the fused
+extract pass, so the checkpointed path has the same one Python node.
 """
 
 from __future__ import annotations
@@ -17,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ultraviolet_spark.functions.udfs import cp_class_hist_udf, extract_stage
+from ultraviolet_spark.functions.udfs import extract_stage
 from ultraviolet_spark.operators.asof import asof_join
 from ultraviolet_spark.operators.windows import (
     SESSION_GAP_SECS_DEFAULT,
@@ -44,7 +49,9 @@ def feature_vector(
     bucket_col: str | None = None,
 ) -> DataFrame:
     """text_extracted → features (SURVEY.md §1.2 schema).  All window
-    frames end at currentRow — no temporal leakage.
+    frames end at currentRow — no temporal leakage.  The input carries
+    ``text_len`` and ``cp_hist`` from ``extract_stage(…,
+    with_features=True)``; this stage adds no Python node.
 
     ``bucket_col``: name of a materialized bucket column (written by
     plans.layout.write_bucketed).  Windows then partition by
@@ -54,12 +61,6 @@ def feature_vector(
     """
     f = text_extracted
     keys = by if bucket_col is None else [bucket_col, by]
-    # skip per-row feature UDFs when the extract stage already fused
-    # them into its kernel pass (with_features=True)
-    if "text_len" not in f.columns:
-        f = f.withColumn("text_len", F.length("text").cast("long"))
-    if "cp_hist" not in f.columns:
-        f = f.withColumn("cp_hist", cp_class_hist_udf("text"))
     f = with_lang_stability(f, by=keys, order=order)
     f = sessionize(f, by=keys, order=order, gap_secs=gap_secs)
     f = with_lags(f, ["text_len"], by=keys, order=order)
@@ -130,9 +131,11 @@ def run_checkpointed_pipeline(spark, pages: DataFrame, warehouse: str,
                               gap_secs: float = SESSION_GAP_SECS_DEFAULT):
     """The flagship pipeline with snapshot checkpoints between stages
     (north_rule resumability).  Re-running after a kill skips every
-    stage whose inputs are unchanged — each stage's fingerprint chains
-    the upstream snapshot, so a changed input cascades recomputation
-    exactly as far as needed.
+    stage whose inputs are unchanged.  Each stage's input fingerprint
+    chains the upstream stage's resume key (its inputs plus its build's
+    code version, ``snapshots.stage_key``), so a changed input or a
+    changed upstream build cascades recomputation exactly as far as
+    needed.
 
     Returns (enriched_features_df, {stage: resumed_bool}).
     """
@@ -141,27 +144,33 @@ def run_checkpointed_pipeline(spark, pages: DataFrame, warehouse: str,
         ParquetSnapshotFormat,
         fingerprint,
         run_stage,
+        stage_key,
     )
 
     fmt = ParquetSnapshotFormat(warehouse)
     resumed: dict[str, bool] = {}
+
+    def build_extracted() -> DataFrame:
+        return extract_stage(pages, with_features=True)
 
     # Per-stage accumulator metrics ride the write pass via df.observe
     # (zero extra jobs) and land in fmt.observed_metrics() — the
     # cross-stage audit table (north_rule 'metrics tables').
     fp1 = fingerprint("text_extracted", inputs_key)
     te, resumed["text_extracted"] = run_stage(
-        spark, fmt, "text_extracted", fp1, lambda: extract_stage(pages),
+        spark, fmt, "text_extracted", fp1, build_extracted,
         observe={"text_bytes": F.sum(F.length("text")),
                  "min_warc_ts": F.min(F.unix_micros(
                      F.col("warc_ts").cast("timestamp"))),
                  "max_warc_ts": F.max(F.unix_micros(
                      F.col("warc_ts").cast("timestamp")))})
 
-    fp2 = fingerprint("features", fp1, gap_secs)
+    def build_features() -> DataFrame:
+        return feature_vector(te, gap_secs=gap_secs)
+
+    fp2 = fingerprint("features", stage_key(fp1, build_extracted), gap_secs)
     feats, resumed["features"] = run_stage(
-        spark, fmt, "features", fp2,
-        lambda: feature_vector(te, gap_secs=gap_secs),
+        spark, fmt, "features", fp2, build_features,
         observe={"total_text_len": F.sum("text_len"),
                  "max_session_id": F.max("session_id")})
 
@@ -171,7 +180,7 @@ def run_checkpointed_pipeline(spark, pages: DataFrame, warehouse: str,
         return enrich_asof(feats, src, on="warc_ts", by="url",
                            value_cols=["first_text_len"])
 
-    fp3 = fingerprint("features_enriched", fp2)
+    fp3 = fingerprint("features_enriched", stage_key(fp2, build_features))
     enriched, resumed["features_enriched"] = run_stage(
         spark, fmt, "features_enriched", fp3, build_enriched)
     return enriched, resumed

@@ -403,6 +403,18 @@ def _code_fingerprint(code) -> str:
     return fingerprint(*parts)
 
 
+def stage_key(inputs_fp: str, build: Callable[[], DataFrame],
+              code_version: str | None = None) -> str:
+    """``run_stage``'s resume key: the input fingerprint mixed with the
+    build's code version.  A downstream stage chains on this key, not
+    on ``inputs_fp``, so a changed upstream build cascades too."""
+    if code_version is None:
+        code = getattr(build, "__code__", None)
+        code_version = (_code_fingerprint(code) if code is not None
+                        else fingerprint(repr(build)))
+    return fingerprint(inputs_fp, code_version)
+
+
 def run_stage(spark: SparkSession, fmt: ParquetSnapshotFormat, table: str,
               inputs_fp: str, build: Callable[[], DataFrame], *,
               stage: str | None = None,
@@ -426,11 +438,7 @@ def run_stage(spark: SparkSession, fmt: ParquetSnapshotFormat, table: str,
     resume a stale snapshot.
     """
     stage = stage or table
-    if code_version is None:
-        code = getattr(build, "__code__", None)
-        code_version = (_code_fingerprint(code) if code is not None
-                        else fingerprint(repr(build)))
-    key = fingerprint(inputs_fp, code_version)
+    key = stage_key(inputs_fp, build, code_version)
     snap = fmt.find(table, key)
     if snap is not None:
         return fmt.read(spark, table, snap.snapshot_id), True
