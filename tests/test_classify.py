@@ -56,6 +56,16 @@ def test_names_length():
     assert len(CLASS_NAMES) == K == 11
 
 
+def test_category_table_equals_list_built_table():
+    from ultraviolet_spark.kernels.classify import _category_table
+
+    cats = [unicodedata.category(chr(c))[0] for c in range(0x110000)]
+    want = np.array([_CAT_IDX.get(c, 6) for c in cats], dtype=np.uint8)
+    got = _category_table()
+    assert got.dtype == np.uint8
+    np.testing.assert_array_equal(got, want)
+
+
 def test_classify_throughput_regression():
     """Perf floor for the fused 28-bucket LUT histogram (round 3: one
     gather + one flat bincount; 3.2-5.2x over the two-gather/two-

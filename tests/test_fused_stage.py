@@ -5,6 +5,8 @@ the per-character class histogram."""
 
 from __future__ import annotations
 
+import tracemalloc
+
 import numpy as np
 import pyarrow as pa
 from hypothesis import given, settings
@@ -83,16 +85,12 @@ def _batch(pages: list) -> pa.RecordBatch:
         names=["id", "html"])
 
 
-@settings(max_examples=150, deadline=None)
-@given(st.lists(_page(), min_size=1, max_size=12))
-def test_fused_stage_matches_sequential_oracles(pages):
-    batch = _batch(pages)
-    html_before = [bytes(b) if b is not None else None
-                   for b in batch.column("html").buffers()]
-    out = list(transcode_extract_batches(iter([batch]), with_features=True))
-    assert len(out) == 1
-    got = out[0].to_pydict()
-    assert got["id"] == list(range(len(pages)))
+def _html_buffers(batch: pa.RecordBatch) -> list:
+    return [bytes(b) if b is not None else None
+            for b in batch.column("html").buffers()]
+
+
+def _assert_rows_match_oracles(pages: list, got: dict) -> None:
     for i, raw in enumerate(pages):
         row = {k: v[i] for k, v in got.items()}
         hist = row["cp_hist"]
@@ -111,13 +109,121 @@ def test_fused_stage_matches_sequential_oracles(pages):
         assert row["bom"] == _bom_name(raw)
         assert row["text_len"] == len(text)
         assert hist == _hist(text)
+
+
+@settings(max_examples=150, deadline=None)
+@given(st.lists(_page(), min_size=1, max_size=12))
+def test_fused_stage_matches_sequential_oracles(pages):
+    batch = _batch(pages)
+    html_before = _html_buffers(batch)
+    out = list(transcode_extract_batches(iter([batch]), with_features=True))
+    assert len(out) == 1
+    got = out[0].to_pydict()
+    assert got["id"] == list(range(len(pages)))
+    _assert_rows_match_oracles(pages, got)
     # the trusted decoder's premise: every extracted text is well-formed
     data, offsets, _ = binary_to_offsets(out[0].column("text").cast(pa.large_binary()))
     valid, _, _ = utf8_validate(data, offsets)
     assert valid.all()
     # clean rows are views of the html buffer, which must stay untouched
-    assert [bytes(b) if b is not None else None
-            for b in batch.column("html").buffers()] == html_before
+    assert _html_buffers(batch) == html_before
+
+
+# one row of every kind the slicing must carry across a boundary: every
+# BOM with a body, a bare BOM, an ill-formed row per codec, null, empty
+_EVERY_KIND = [None, b""] + [
+    bom + body
+    for _, bom, codec in _ENCODINGS
+    for body in (b"", "<p>Grüße &amp; 中文 💩</p>".encode(codec),
+                 "<b>x</b>".encode(codec) + _BAD[len(bom) % len(_BAD)])
+]
+
+
+@settings(max_examples=60, deadline=None)
+@given(st.lists(_page(), max_size=24), st.sampled_from([64, 1024, 4096]),
+       st.sampled_from(_ENCODINGS), st.randoms(use_true_random=False))
+def test_fused_stage_slices_match_oracles(pages, slice_bytes, enc, rnd):
+    """A batch larger than 1.5 slices comes back as several batches, one
+    per row slice, a row larger than the slice alone in its own; their
+    concatenation is the whole-batch result, row for row."""
+    import ultraviolet_spark.functions.udfs as U
+
+    _, bom, codec = enc
+    big = bom + ("<div>big &lt;row&gt; é 中 💩</div>" * (slice_bytes // 8)).encode(codec)
+    pages = pages + _EVERY_KIND + [big]
+    rnd.shuffle(pages)
+    n = len(pages)
+    batch = pa.RecordBatch.from_arrays(
+        [pa.array(range(n), type=pa.int64()),
+         pa.array(pages, type=pa.large_binary()),
+         pa.array([None if i % 5 == 0 else f"u{i}" for i in range(n)])],
+        names=["id", "html", "url"])
+    html_before = _html_buffers(batch)
+    old = U.STAGE_SLICE
+    try:
+        U.STAGE_SLICE = slice_bytes
+        out = list(transcode_extract_batches(iter([batch]), with_features=True))
+        U.STAGE_SLICE = 1 << 40
+        (whole,) = transcode_extract_batches(iter([batch]), with_features=True)
+    finally:
+        U.STAGE_SLICE = old
+    assert len(out) > 1
+    assert [b.num_rows for b in out if pages.index(big) in b.column("id").to_pylist()] == [1]
+    got = pa.Table.from_batches(out)
+    assert got.equals(pa.Table.from_batches([whole]))
+    got = got.to_pydict()
+    assert got["id"] == list(range(n))
+    assert got["url"] == batch.column("url").to_pylist()
+    _assert_rows_match_oracles(pages, {k: v for k, v in got.items() if k != "url"})
+    assert _html_buffers(batch) == html_before
+
+
+def test_fused_stage_peak_allocation_within_input_bytes():
+    """~2,000 × 10 KB rows of mixed-BOM html (every encoding, 1 in 20
+    ill-formed), outputs consumed one at a time: the stage's peak
+    allocation is at most the batch's html bytes.  A whole-batch pass
+    peaked at 4.8×."""
+    para = '<p class="t">Grüße &amp; 中文 text 💩 words</p>\n<script>x=1</script>'
+    pages = []
+    for i in range(2000):
+        _, bom, codec = _ENCODINGS[i % len(_ENCODINGS)]
+        unit = para.encode(codec)
+        body = unit * (10_000 // len(unit))
+        if i % 20 == 0:
+            body = body[:100] + _BAD[i % len(_BAD)] + body[100:]
+        pages.append(bom + body)
+    batch = _batch(pages)
+    html_bytes = sum(len(p) for p in pages)
+    # build the lazily cached lookup tables outside the measurement
+    list(transcode_extract_batches(iter([_batch(pages[:len(_ENCODINGS)])]),
+                                   with_features=True))
+    rows = 0
+    tracemalloc.start()
+    try:
+        for out in transcode_extract_batches(iter([batch]), with_features=True):
+            rows += out.num_rows
+        peak = tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+    assert rows == len(pages)
+    assert peak <= html_bytes, peak / html_bytes
+
+
+@settings(max_examples=100, deadline=None)
+@given(st.lists(st.one_of(st.none(), st.binary(max_size=8)), max_size=12), st.data())
+def test_binary_to_offsets_slice_equals_compact_copy(rows, data):
+    """A sliced array is read in place, as its compact copy would be."""
+    lo = data.draw(st.integers(0, len(rows)))
+    length = data.draw(st.integers(0, len(rows) - lo))
+    for typ, vals in ((pa.binary(), rows), (pa.large_binary(), rows),
+                      (pa.string(), [r if r is None else r.hex() for r in rows])):
+        arr = pa.array(vals, type=typ)
+        sl = arr.slice(lo, length)
+        got = binary_to_offsets(sl)
+        for g, w in zip(got, binary_to_offsets(pa.concat_arrays([sl]))):
+            np.testing.assert_array_equal(g, w)
+        if len(got[0]):
+            assert np.shares_memory(got[0], np.frombuffer(arr.buffers()[2], np.uint8))
 
 
 @settings(max_examples=200, deadline=None)

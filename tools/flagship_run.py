@@ -28,9 +28,6 @@ def main() -> None:
     ap.add_argument("--replicate", type=int, default=48)
     ap.add_argument("--sf-dir", default="/root/testdata/sf0.1")
     ap.add_argument("--runs", type=int, default=3)
-    ap.add_argument("--batch", type=int, default=2000,
-                    help="arrow maxRecordsPerBatch — raise for small "
-                         "rows, lower for multi-KB html blobs")
     ap.add_argument("--text-repeat", type=int, default=20,
                     help="tile doc text to web-realistic page size "
                          "(~10 KB at 20)")
@@ -53,11 +50,7 @@ def main() -> None:
     )
 
     spark = get_spark("flagship_scale", cores=args.cores,
-                      shuffle_partitions=args.cores,
-                      extra_conf={
-                          "spark.sql.execution.arrow.maxRecordsPerBatch":
-                              str(args.batch),
-                      })
+                      shuffle_partitions=args.cores)
     spark.sparkContext.setLogLevel("ERROR")
 
     if args.prep_only:

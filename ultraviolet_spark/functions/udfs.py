@@ -9,7 +9,10 @@ Two surfaces (SURVEY.md §2.9):
   zero pandas, zero per-row Python.  UTF-8 is its only pivot: html
   decodes once to UTF-8 (clean UTF-8 rows pass through unchanged),
   text is extracted from those bytes, and the optional features read
-  the extracted UTF-8 with the trusted decoder.
+  the extracted UTF-8 with the trusted decoder.  It runs each Arrow
+  batch as row-aligned slices of ~2 MB of html and yields one output
+  batch per slice, so a worker's memory follows the slice, not the
+  batch.
 
 * scalar ``pandas_udf`` wrappers (utf8_decode_udf, utf8_info_udf,
   cp_class_hist_udf, …) for use inside ordinary DataFrame expressions;
@@ -42,7 +45,7 @@ from ultraviolet_spark.kernels.buffers import (
     offsets_to_pyarrow_string,
 )
 from ultraviolet_spark.kernels.classify import K, utf8_class_histogram
-from ultraviolet_spark.kernels.extract import extract_text
+from ultraviolet_spark.kernels.extract import STAGE_SLICE, extract_text
 from ultraviolet_spark.kernels.transcode import (
     BOM_NAMES,
     decode_to_utf8,
@@ -168,40 +171,66 @@ def transcode_extract_batches(
     TEXT_FEATURE_FIELDS when ``with_features``: codepoint count and
     class histogram of the extracted text, fused into the same pass so
     the text crosses the JVM↔Python boundary exactly once).  The html
-    buffer is never written: clean UTF-8 rows are views of it."""
-    for batch in batches:
-        html = batch.column(html_col)
-        data, offsets, nulls = binary_to_offsets(html)
-        u8, u8o, n_repl, bom = decode_to_utf8(data, offsets)
-        ext, exto = extract_text(u8, u8o)
-        del u8                      # free the decoded html before the features
+    buffer is never written: clean UTF-8 rows are views of it.
 
-        cols, names = [], []
-        for name, col in zip(batch.schema.names, batch.columns):
-            if name == html_col:
-                continue
-            cols.append(col)
-            names.append(name)
-        cols.append(offsets_to_pyarrow_string(ext, exto, nulls))
-        names.append("text")
-        cols.append(pa.array(np.diff(exto), type=pa.int64()))
-        names.append("text_bytes")
-        cols.append(pa.array((n_repl == 0) & ~nulls))
-        names.append("valid_utf8")
-        cols.append(pa.array(n_repl, type=pa.int64()))
-        names.append("n_replacements")
-        cols.append(pa.array(BOM_NAMES[bom]))
-        names.append("bom")
-        if with_features:
-            # extracted text is well-formed by construction: no
-            # second validation pass
-            text_len, hist = utf8_class_histogram(ext, exto)
-            cols.append(pa.array(text_len, type=pa.int64()))
-            names.append("text_len")
-            cols.append(pa.FixedSizeListArray.from_arrays(
-                pa.array(hist.ravel(), type=pa.int64()), K).cast(pa.list_(pa.int64())))
-            names.append("cp_hist")
-        yield pa.RecordBatch.from_arrays(cols, names=names)
+    Each batch runs as zero-copy, row-aligned slices of about
+    ``STAGE_SLICE`` html bytes (a larger row is a slice of its own), and
+    one output batch is yielded per slice, so the kernels' temporaries
+    are bounded by the slice, not the batch.  A batch of at most
+    1.5 × ``STAGE_SLICE`` is one slice."""
+    for batch in batches:
+        _, offsets, _ = binary_to_offsets(batch.column(html_col))
+        for r0, r1 in _row_slices(offsets):
+            yield _extract_slice(batch.slice(r0, r1 - r0), html_col, with_features)
+
+
+def _row_slices(offsets: np.ndarray) -> Iterator[tuple[int, int]]:
+    """Row ranges [r0, r1) of about ``STAGE_SLICE`` bytes each."""
+    n = len(offsets) - 1
+    if offsets[-1] <= STAGE_SLICE + (STAGE_SLICE >> 1):
+        yield 0, n
+        return
+    r0 = 0
+    while r0 < n:
+        r1 = int(np.searchsorted(offsets, offsets[r0] + STAGE_SLICE, "right")) - 1
+        r1 = min(max(r1, r0 + 1), n)   # a single >slice row stands alone
+        yield r0, r1
+        r0 = r1
+
+
+def _extract_slice(batch: pa.RecordBatch, html_col: str,
+                   with_features: bool) -> pa.RecordBatch:
+    data, offsets, nulls = binary_to_offsets(batch.column(html_col))
+    u8, u8o, n_repl, bom = decode_to_utf8(data, offsets)
+    ext, exto = extract_text(u8, u8o)
+    del u8                      # free the decoded html before the features
+
+    cols, names = [], []
+    for name, col in zip(batch.schema.names, batch.columns):
+        if name == html_col:
+            continue
+        cols.append(col)
+        names.append(name)
+    cols.append(offsets_to_pyarrow_string(ext, exto, nulls))
+    names.append("text")
+    cols.append(pa.array(np.diff(exto), type=pa.int64()))
+    names.append("text_bytes")
+    cols.append(pa.array((n_repl == 0) & ~nulls))
+    names.append("valid_utf8")
+    cols.append(pa.array(n_repl, type=pa.int64()))
+    names.append("n_replacements")
+    cols.append(pa.array(BOM_NAMES[bom]))
+    names.append("bom")
+    if with_features:
+        # extracted text is well-formed by construction: no
+        # second validation pass
+        text_len, hist = utf8_class_histogram(ext, exto)
+        cols.append(pa.array(text_len, type=pa.int64()))
+        names.append("text_len")
+        cols.append(pa.FixedSizeListArray.from_arrays(
+            pa.array(hist.ravel(), type=pa.int64()), K).cast(pa.list_(pa.int64())))
+        names.append("cp_hist")
+    return pa.RecordBatch.from_arrays(cols, names=names)
 
 
 def extract_stage(pages: DataFrame, html_col: str = "html",
@@ -212,6 +241,8 @@ def extract_stage(pages: DataFrame, html_col: str = "html",
     because the mapInArrow input schema drops unused columns first.
     ``with_features`` fuses text_len + cp_hist into the same kernel
     pass (one Python crossing for the whole per-row feature set).
+    Each input batch comes back as one output batch per row slice of
+    ``transcode_extract_batches``, in row order.
     """
     keep = [c for c in pages.columns if c not in ("text",)]  # drop golden col
     src = pages.select(*keep)

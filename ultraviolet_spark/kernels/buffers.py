@@ -22,14 +22,12 @@ def binary_to_offsets(arr: pa.Array) -> tuple[np.ndarray, np.ndarray, np.ndarray
     ``(data_u8, offsets_i64, null_mask)``.
 
     Nulls are represented as empty rows plus a boolean mask (True =
-    null).  Handles chunked arrays, sliced arrays, and both 32- and
-    64-bit offset widths.
+    null).  Handles chunked arrays, sliced arrays (without a copy: the
+    data is a view of the slice's bytes), and both 32- and 64-bit
+    offset widths.
     """
     if isinstance(arr, pa.ChunkedArray):
         arr = arr.combine_chunks()
-    # Normalize sliced arrays: take a compact copy only when sliced.
-    if arr.offset != 0:
-        arr = arr.combine_chunks() if isinstance(arr, pa.ChunkedArray) else pa.concat_arrays([arr])
     typ = arr.type
     if pa.types.is_string(typ) or pa.types.is_binary(typ):
         off_dtype = np.int32
@@ -50,9 +48,10 @@ def binary_to_offsets(arr: pa.Array) -> tuple[np.ndarray, np.ndarray, np.ndarray
         null_mask = ~np.asarray(arr.is_valid())
     else:
         null_mask = np.zeros(len(arr), dtype=bool)
-    # Re-base offsets to 0 (sliced arrays start mid-buffer).
-    if len(offsets) and offsets[0] != 0:
-        data = data[offsets[0]:offsets[-1]]
+    # A slice's rows are a window of the buffer: view just those bytes
+    # and re-base the offsets to 0.
+    data = data[offsets[0]:offsets[-1]]
+    if offsets[0] != 0:
         offsets = offsets - offsets[0]
     return data, np.ascontiguousarray(offsets), null_mask
 

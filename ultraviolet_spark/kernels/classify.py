@@ -29,10 +29,14 @@ _CAT_IDX = {"L": 0, "M": 1, "N": 2, "P": 3, "S": 4, "Z": 5, "C": 6}
 
 @lru_cache(maxsize=1)
 def _category_table() -> np.ndarray:
+    # streamed into the array: built through 1.1M-element lists, the
+    # freed list memory (~17.7 MB) stays resident in every Python
+    # worker, whose malloc thresholds (session.py) never trim the heap
     import unicodedata
 
-    cats = [unicodedata.category(chr(c))[0] for c in range(0x110000)]
-    return np.array([_CAT_IDX.get(c, 6) for c in cats], dtype=np.uint8)
+    return np.fromiter(
+        (_CAT_IDX.get(unicodedata.category(chr(c))[0], 6) for c in range(0x110000)),
+        dtype=np.uint8, count=0x110000)
 
 
 @lru_cache(maxsize=1)

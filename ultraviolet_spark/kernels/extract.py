@@ -350,6 +350,16 @@ def extract_text(data: np.ndarray, offsets: np.ndarray):
 # _process_units is purely row-local, so stitching is offset arithmetic.
 _UNIT_CHUNK = 1 << 18
 
+# html bytes per row-aligned slice of the fused stage
+# (functions/udfs.py:transcode_extract_batches), whose kernel
+# temporaries peak at several times a slice.  Measured on 4 vCPUs at
+# 1 / 2 / 4 MB slices and unsliced: perfbench pit_large_mixed_pages
+# worker peak RSS 162 / 166 / 172 / 210 MB; out of Spark, the largest
+# allocation over 10-20 MB batches 11.5 / 15.1 / 23.0 / 78 MB.  One
+# core, 50 MB of that html: 1 MB slices ran ~5% slower than unsliced,
+# 2 MB ones did not.
+STAGE_SLICE = 2 << 20
+
 
 def _process_units_chunked(s: np.ndarray, s_off: np.ndarray, n: int):
     if len(s) <= _UNIT_CHUNK + (_UNIT_CHUNK >> 1):
