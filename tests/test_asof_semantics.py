@@ -5,8 +5,11 @@ inclusive tolerance on long, timestamp and timestamp_ntz columns."""
 
 from __future__ import annotations
 
+from functools import reduce
+
 import pandas as pd
 import pytest
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ultraviolet_spark.operators.asof import asof_join
@@ -89,3 +92,45 @@ def test_tolerance_vs_pandas(spark, ts_type, direction):
                             tolerance=tol))
     assert got == _pandas(left, right, direction=direction, tolerance=tol)
     assert got[4] is None
+
+
+# One frame that is both sides: is_r marks the right rows.  u ties a
+# left row with a right row at 5 and two right rows (one value) at 10;
+# a flagged row with a null key or time never matches; a null flag is
+# not a right row; w has no right rows.
+SELF = [("u", 1, 1, 10.0, False), ("u", 2, 5, 20.0, False),
+        ("u", 3, 5, 50.0, True), ("u", 4, 10, 100.0, True),
+        ("u", 5, 10, 100.0, True), ("u", 6, 12, 120.0, True),
+        ("u", 7, 15, 150.0, False), ("u", 8, 18, 180.0, True),
+        ("u", 9, None, 888.0, True), (None, 10, 4, 999.0, True),
+        ("v", 11, 3, 30.0, True), ("v", 12, 8, 1.0, None),
+        ("v", 13, 9, 90.0, False), ("w", 14, 7, 70.0, False)]
+
+
+@pytest.mark.parametrize("direction", DIRECTIONS)
+def test_right_from_left_equals_filtered_right(spark, direction):
+    """The right-from-left form (``right`` names a flag column of
+    ``left``) answers exactly as the two-input as-of against
+    ``left.filter(flag)``, with the flag column dropped."""
+    df = spark.createDataFrame(
+        SELF, "user_id string, event_id long, ts long, v double, is_r boolean")
+    cases = [(strict, tolerance) for strict in (False, True) for tolerance in (None, 3)]
+    got, want = [], []
+    for k, (strict, tolerance) in enumerate(cases):
+        kw = dict(on="ts", by="user_id", value_cols=["v"], direction=direction,
+                  strict=strict, tolerance=tolerance)
+        g = asof_join(df, "is_r", **kw)
+        w = asof_join(df.drop("is_r"), df.filter("is_r"), **kw)
+        assert g.columns == w.columns == ["user_id", "event_id", "ts", "v", "v_r"]
+        got.append(g.withColumn("case", F.lit(k)))
+        want.append(w.withColumn("case", F.lit(k)))
+
+    def answers(frames):
+        rows = reduce(DataFrame.unionAll, frames).collect()
+        return {(r["case"], r["event_id"]): r["v_r"] for r in rows}
+
+    got = answers(got)
+    assert got == answers(want)
+    assert len(got) == len(cases) * len(SELF)
+    if direction == "backward":       # the tie at (u, 5): inside unless strict
+        assert [got[k, 2] for k in range(len(cases))] == [50.0, 50.0, None, None]

@@ -30,6 +30,14 @@ CASES = [
     ("entity_too_long", "&#x10FFFF0;", "&#x10FFFF0;"),
     ("entity_max", "&#x10FFFF;", "\U0010ffff"),
     ("entity_surrogate", "&#xD800;", "&#xD800;"),
+    # the shortest spans of each UTF-8 length, alone, at row edges and
+    # next to whitespace: the UTF-8 is written over the span's head
+    ("entity_wide_min_2byte", "&#128;", "\x80"),
+    ("entity_wide_min_2byte_hex_edges", "&#x80;a&#x80;", "\x80a\x80"),
+    ("entity_wide_min_3byte", "&#2048;&#x800;", "\u0800\u0800"),
+    ("entity_wide_min_4byte", "&#65536;&#x10000;", "\U00010000\U00010000"),
+    ("entity_wide_min_ws", "  &#128;  &#2048;\t&#65536;  ", "\x80 \u0800 \U00010000"),
+    ("entity_wide_ws_entities", "a&#10;&#128;&#32;b", "a \x80 b"),
     ("entity_across_tag", "&am<b>p;", "&amp;".replace("amp", "amp")),  # "&amp;" → "&"
     ("ws_collapse", "a  \t\n  b", "a b"),
     ("ws_strip", "  a b  ", "a b"),
@@ -88,6 +96,19 @@ def test_batch_isolation():
     out, oo = extract_text(data, offsets)
     got = [r.decode() for r in list_from_rows(out, oo)]
     assert got == ["", "plain", "c", ""]
+
+
+def test_min_wide_entities_at_row_edges_batch():
+    """Rows that are nothing but a minimal-span wide entity (or one
+    beside whitespace) next to empty and plain rows: each entity's UTF-8
+    stays inside its own row."""
+    rows = ["&#128;", "", "&#x800;", " &#65536; ", "x", "&#x10000;\n",
+            "\t&#2048;", "&#128;&#128;"]
+    data, offsets = rows_from_list([r.encode() for r in rows])
+    out, oo = extract_text(data, offsets)
+    got = [r.decode("utf-8") for r in list_from_rows(out, oo)]
+    assert got == [golden_extract(r) for r in rows]
+    assert got[0] == "\x80" and got[3] == "\U00010000"
 
 
 def test_row_split_mixed_entity_batch_equals_sequential():

@@ -116,18 +116,39 @@ def test_asof_join_single_exchange_per_side(tables):
 
 def test_flagship_plan_one_exchange_one_python_node(spark, pages_path):
     """The executed flagship: the features' url exchange is the only
-    shuffle — the as-of window reuses its partitioning — and the extract
-    MapInArrow is the only Python node."""
+    shuffle — the as-of window reuses its partitioning — the extract
+    MapInArrow is the only Python node, and nothing is cached: the as-of
+    reads the features once."""
     from ultraviolet_spark.pipeline import flagship_enriched
 
     out = flagship_enriched(spark.read.parquet(pages_path))
-    try:
-        out.collect()
-        nodes = _executed_nodes(out)
-    finally:
-        spark.catalog.clearCache()
+    out.collect()
+    nodes = _executed_nodes(out)
     assert nodes.count("ShuffleExchangeExec") == 1, nodes
     assert nodes.count("Python") == 1, nodes
+    assert "InMemoryTableScanExec" not in nodes, nodes
+
+
+def test_checkpointed_enriched_stage_scans_features_once(
+        spark, pages_path, tmp_path, monkeypatch):
+    """The enriched stage of the checkpointed pipeline reads the features
+    snapshot once: its as-of right side comes from the same scan."""
+    from ultraviolet_spark.pipeline import run_checkpointed_pipeline
+    from ultraviolet_spark.plans.snapshots import ParquetSnapshotFormat
+
+    written = {}
+    write = ParquetSnapshotFormat.write
+
+    def capture(self, df, table, **kwargs):
+        written[table] = df
+        return write(self, df, table, **kwargs)
+
+    monkeypatch.setattr(ParquetSnapshotFormat, "write", capture)
+    run_checkpointed_pipeline(spark, spark.read.parquet(pages_path),
+                              str(tmp_path / "wh"), inputs_key=pages_path)
+    nodes = _executed_nodes(written["features_enriched"])
+    assert nodes.count("FileSourceScanExec") == 1, nodes
+    assert "UnionExec" not in nodes, nodes
 
 
 def test_features_over_text_extracted_snapshot_no_python_node(

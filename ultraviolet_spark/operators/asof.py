@@ -14,9 +14,20 @@ union of both inputs, all in Catalyst (no Python worker):
                                    ROWS UNBOUNDED PRECEDING..CURRENT ROW)
     → keep __side = 0
 
+When the right rows are some of the left rows (the flagship's right
+side is the features' own first crawl per url), the right-from-left
+form drops the union: ``right`` names a boolean column of ``left``, and
+one generator tags each left row, twice where the flag holds:
+
+    left → explode(when(flag, [0, 1]) else [0]) AS __side,
+           __r = struct(t, values…) on side 1 only
+    → the same window, tie order, directions and tolerance
+
+so a left that is a whole pipeline is read once and never persisted.
+
 Shuffle census: ONE hash exchange on ``by`` for the union, and none
 when both inputs already hash-partition on ``by`` (the flagship, whose
-two sides come out of ``feature_vector``'s url windows) or scan a
+one input comes out of ``feature_vector``'s url windows) or scan a
 ``write_bucketed`` layout (``bucket_col``; tests/test_layout.py).  The
 per-key sort is the window's own and spills to disk on a hot key.
 """
@@ -36,13 +47,13 @@ _SALT = "__salt"
 
 def asof_join(
     left: DataFrame,
-    right: DataFrame,
+    right: DataFrame | str,
     *,
     on: str = "warc_ts",
     right_on: str | None = None,
     by: str = "url",
     right_by: str | None = None,
-    value_cols: list[str] | None = None,
+    value_cols: list[str] | dict[str, str] | None = None,
     direction: str = "backward",
     strict: bool = False,
     tolerance: pd.Timedelta | str | int | None = None,
@@ -52,8 +63,16 @@ def asof_join(
     bucket_col: str | None = None,
 ) -> DataFrame:
     """As-of join; returns all left columns + right ``value_cols``
-    (suffixed on collision).  ``direction`` ∈ {backward, forward,
-    nearest} (backward is the point-in-time default).
+    (suffixed on collision, or named by the keys when ``value_cols`` is
+    a dict ``{output name: right column}``).  ``direction`` ∈
+    {backward, forward, nearest} (backward is the point-in-time
+    default).
+
+    Right-from-left form: ``right`` may instead name a boolean column of
+    ``left``.  The right rows are then the left rows where it is true,
+    the same answer as ``asof_join(left.drop(right), left.filter(right),
+    …)``, but ``left`` is read once, so a left that is a whole pipeline
+    needs no persist.  That column is not returned.
 
     Nulls: a right row whose ``by`` or ``on`` is null never matches; a
     left row whose ``on`` is null gets null values.  ``tolerance`` is
@@ -80,12 +99,19 @@ def asof_join(
     bucketed layout fixes bucket ids at write time; re-bucket hot keys
     at ingest instead).
     """
-    right_on = right_on or on
-    right_by = right_by or by
+    if isinstance(right, str):
+        right_on, right_by = on, by
+        right_cols = [c for c in left.columns if c != right]
+    else:
+        right_on, right_by = right_on or on, right_by or by
+        right_cols = right.columns
     if value_cols is None:
-        value_cols = [c for c in right.columns
+        value_cols = [c for c in right_cols
                       if c not in (right_on, right_by, bucket_col)]
-    names = [c + suffix if c in left.columns else c for c in value_cols]
+    if isinstance(value_cols, dict):
+        names, value_cols = list(value_cols), list(value_cols.values())
+    else:
+        names = [c + suffix if c in left.columns else c for c in value_cols]
     return _union_asof(left, [(right, right_by, right_on, value_cols, names)],
                        on=on, by=by, direction=direction, strict=strict,
                        tolerance=tolerance, hot_keys=hot_keys, salt=salt,
@@ -98,55 +124,75 @@ def _union_asof(left: DataFrame, rights: list[tuple], *, on: str, by: str,
                 bucket_col: str | None = None) -> DataFrame:
     """The as-of of ``left`` against every ``(right, right_by, right_on,
     value_cols, out_names)`` in ``rights``, all in ONE window pass: right
-    side i fills only its own struct column ``__r{i}``."""
+    side i fills only its own struct column ``__r{i}``.
+
+    Right-from-left form: ``rights`` is one entry whose ``right`` names
+    a boolean column of ``left`` (its ``right_by``/``right_on`` are
+    ignored).  No union: the generator of the module docstring tags the
+    left rows, and the window, tie order, directions and tolerance are
+    the same."""
     if direction not in ("backward", "forward", "nearest"):
         raise ValueError(f"direction must be backward|forward|nearest, got {direction!r}")
     if bucket_col is not None and hot_keys:
         raise ValueError("bucket_col and hot_keys are mutually exclusive")
-    ltype = {f.name: f.dataType for f in left.schema.fields}
+    flag = rights[0][0] if isinstance(rights[0][0], str) else None
+    if flag is not None and len(rights) > 1:
+        raise ValueError("the right-from-left form takes one right side")
     # The keys travel under fresh names: a union keeps its children's
     # hash partitioning only when they agree attribute for attribute,
     # and a pass-through column of a catalog table carries a qualifier
     # that defeats the match.
     keys = {c: f"__k{i}" for i, c in enumerate([bucket_col, by]) if c}
-    slots = [f"__r{i}" for i in range(len(rights))]
+    out_cols = [c for c in left.columns if c != flag]
+    lcols = [keys.get(c, c) for c in out_cols]
+    left_keyed = [F.col(c).alias(keys[c]) if c in keys else c for c in out_cols]
+    t = F.col(on)
 
-    # each right side as (keys, on, __r): __r = struct(t, v0, v1, …) is
-    # never null, so last(ignorenulls) sees exactly the right rows
-    packed = []
-    for r, r_by, r_on, value_cols, _ in rights:
-        r_t = F.col(r_on).cast(ltype[on])
-        src = {bucket_col: bucket_col, by: r_by}
-        packed.append(
-            r.filter(F.col(r_by).isNotNull() & F.col(r_on).isNotNull())
-            .select(*[F.col(src[c]).cast(ltype[c]).alias(k) for c, k in keys.items()],
-                    r_t.alias(on),
-                    F.struct(r_t.alias("t"), *[F.col(c).alias(f"v{k}")
-                                               for k, c in enumerate(value_cols)])
-                    .alias("__r")))
-    null_slot = [F.lit(None).cast(p.schema["__r"].dataType) for p in packed]
+    def pack(t_r, value_cols):
+        # __r = struct(t, v0, v1, …) is never null, so last(ignorenulls)
+        # sees exactly the right rows
+        return F.struct(t_r.alias("t"), *[F.col(c).alias(f"v{k}")
+                                          for k, c in enumerate(value_cols)])
 
-    branches = [left.select(
-        *[F.col(c).alias(keys[c]) if c in keys else c for c in left.columns],
-        F.lit(0).alias(_SIDE), *[n.alias(s) for n, s in zip(null_slot, slots)])]
-    for i, p in enumerate(packed):
-        branches.append(p.select(
-            *[F.col(keys.get(c, c)) if keys.get(c, c) in p.columns
-              else F.lit(None).cast(ltype[c]).alias(c) for c in left.columns],
-            F.lit(1).alias(_SIDE),
-            *[(F.col("__r") if j == i else n).alias(s)
-              for j, (n, s) in enumerate(zip(null_slot, slots))]))
+    if flag is not None:
+        is_right = F.col(flag) & F.col(by).isNotNull() & t.isNotNull()
+        u = left.select(*left_keyed, F.explode(
+            F.when(is_right, F.array(F.lit(0), F.lit(1)))
+            .otherwise(F.array(F.lit(0)))).alias(_SIDE))
+        value_cols = [keys.get(c, c) for c in rights[0][3]]
+        slots = [F.when(F.col(_SIDE) == 1, pack(t, value_cols))]
+    else:
+        ltype = {f.name: f.dataType for f in left.schema.fields}
+        packed = []
+        for r, r_by, r_on, value_cols, _ in rights:
+            r_t = F.col(r_on).cast(ltype[on])
+            src = {bucket_col: bucket_col, by: r_by}
+            packed.append(
+                r.filter(F.col(r_by).isNotNull() & F.col(r_on).isNotNull())
+                .select(*[F.col(src[c]).cast(ltype[c]).alias(k) for c, k in keys.items()],
+                        r_t.alias(on), pack(r_t, value_cols).alias("__r")))
+        null_slot = [F.lit(None).cast(p.schema["__r"].dataType) for p in packed]
+        slots = [f"__r{i}" for i in range(len(rights))]
+        branches = [left.select(*left_keyed, F.lit(0).alias(_SIDE),
+                                *[n.alias(s) for n, s in zip(null_slot, slots)])]
+        for i, p in enumerate(packed):
+            branches.append(p.select(
+                *[F.col(k) if k in p.columns else F.lit(None).cast(ltype[c]).alias(c)
+                  for c, k in zip(out_cols, lcols)],
+                F.lit(1).alias(_SIDE),
+                *[(F.col("__r") if j == i else n).alias(s)
+                  for j, (n, s) in enumerate(zip(null_slot, slots))]))
+        u = reduce(DataFrame.union, branches)
+        slots = [F.col(s) for s in slots]
     part = list(keys.values())
     if hot_keys:
         is_hot = F.array_contains(F.array(*[F.lit(k) for k in hot_keys]), F.col(keys[by]))
-        branches[0] = branches[0].withColumn(
-            _SALT, F.when(is_hot, F.pmod(F.xxhash64(on), F.lit(salt)))
-            .otherwise(F.lit(0).cast("long")))
-        branches[1:] = [b.withColumn(_SALT, F.explode(
-            F.when(is_hot, F.sequence(F.lit(0), F.lit(salt - 1)).cast("array<long>"))
-            .otherwise(F.array(F.lit(0).cast("long"))))) for b in branches[1:]]
+        u = u.withColumn(_SALT, F.explode(
+            F.when(is_hot & (F.col(_SIDE) == 1),
+                   F.sequence(F.lit(0), F.lit(salt - 1)).cast("array<long>"))
+            .when(is_hot, F.array(F.pmod(F.xxhash64(on), F.lit(salt))))
+            .otherwise(F.array(F.lit(0).cast("long")))))
         part.append(_SALT)
-    u = reduce(DataFrame.union, branches)
 
     # Running frames only (O(n) per key): backward orders time ascending,
     # forward descending.  At a tied timestamp the right row sorts first,
@@ -157,7 +203,6 @@ def _union_asof(left: DataFrame, rights: list[tuple], *, on: str, by: str,
         Window.unboundedPreceding, Window.currentRow)
     fwd = w.orderBy(F.col(on).desc(), tie).rowsBetween(
         Window.unboundedPreceding, Window.currentRow)
-    t = F.col(on)
 
     def gap(m):
         return F.when(m["t"] <= t, t - m["t"]).otherwise(m["t"] - t)
@@ -165,20 +210,19 @@ def _union_asof(left: DataFrame, rights: list[tuple], *, on: str, by: str,
     if isinstance(tolerance, str) or hasattr(tolerance, "total_seconds"):
         tolerance = pd.Timedelta(tolerance).to_pytimedelta()
     matched = []
-    for s in slots:
-        b = F.last(s, ignorenulls=True).over(back)
-        f = F.last(s, ignorenulls=True).over(fwd)
+    for i, r in enumerate(slots):
+        b = F.last(r, ignorenulls=True).over(back)
+        f = F.last(r, ignorenulls=True).over(fwd)
         m = {"backward": b, "forward": f}.get(direction)
         if m is None:  # nearest: the closer candidate, ties to backward
             m = F.when(f.isNull() | (b.isNotNull() & (gap(b) <= gap(f))), b).otherwise(f)
         if tolerance is not None:
             m = F.when(gap(m) <= F.lit(tolerance), m)
-        matched.append(F.when(t.isNotNull(), m).alias(s))
-    lcols = [keys.get(c, c) for c in left.columns]
+        matched.append(F.when(t.isNotNull(), m).alias(f"__r{i}"))
     out = u.select(*lcols, _SIDE, *matched).filter(F.col(_SIDE) == 0)
-    return out.select(*[F.col(k).alias(c) for k, c in zip(lcols, left.columns)], *[
-        F.col(s)[f"v{k}"].alias(name)
-        for s, (_, _, _, _, names) in zip(slots, rights)
+    return out.select(*[F.col(k).alias(c) for k, c in zip(lcols, out_cols)], *[
+        F.col(f"__r{i}")[f"v{k}"].alias(name)
+        for i, (_, _, _, _, names) in enumerate(rights)
         for k, name in enumerate(names)])
 
 

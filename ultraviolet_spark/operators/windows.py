@@ -7,13 +7,13 @@ tests/test_leakage.py).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 SESSION_GAP_SECS_DEFAULT = 24 * 3600.0  # G = 24h (FIXTURES.md §1)
 
 
-def _w(by, order: str, tiebreak: str | None = None):
+def key_window(by, order: str, tiebreak: str | None = None):
     """``by`` may be a column name or a list of names.  Prepending a
     materialized bucket column (plans.layout.BUCKET_COL) to the entity
     key keeps the window semantically identical (bucket = f(key)) while
@@ -24,14 +24,16 @@ def _w(by, order: str, tiebreak: str | None = None):
     return Window.partitionBy(*keys).orderBy(*cols)
 
 
+def lag_cols(cols: list[str], w, ks: tuple[int, ...] = (1,), *,
+             fn=F.lag, tag: str = "lag") -> dict[str, Column]:
+    """``{c}_{tag}{k}``: ``fn(c, k)`` over ``w`` for every column and k."""
+    return {f"{c}_{tag}{k}": fn(c, k).over(w) for c in cols for k in ks}
+
+
 def with_lags(df: DataFrame, cols: list[str], *, by: str = "url",
               order: str = "warc_ts", ks: tuple[int, ...] = (1,),
               tiebreak: str | None = None) -> DataFrame:
-    w = _w(by, order, tiebreak)
-    for c in cols:
-        for k in ks:
-            df = df.withColumn(f"{c}_lag{k}", F.lag(c, k).over(w))
-    return df
+    return df.withColumns(lag_cols(cols, key_window(by, order, tiebreak), ks))
 
 
 def with_leads(df: DataFrame, cols: list[str], *, by: str = "url",
@@ -39,32 +41,49 @@ def with_leads(df: DataFrame, cols: list[str], *, by: str = "url",
                tiebreak: str | None = None) -> DataFrame:
     """lead(k) — generic operator; NOT for point-in-time feature paths
     (temporal-leakage rule, SURVEY.md §2.6)."""
-    w = _w(by, order, tiebreak)
-    for c in cols:
-        for k in ks:
-            df = df.withColumn(f"{c}_lead{k}", F.lead(c, k).over(w))
-    return df
+    return df.withColumns(
+        lag_cols(cols, key_window(by, order, tiebreak), ks, fn=F.lead, tag="lead"))
+
+
+def ffill_col(col, w) -> Column:
+    """last-observed forward-fill: frame = unboundedPreceding..currentRow."""
+    return F.last(col, ignorenulls=True).over(
+        w.rowsBetween(Window.unboundedPreceding, Window.currentRow))
 
 
 def with_ffill(df: DataFrame, col: str, *, by: str = "url",
                order: str = "warc_ts", out: str | None = None,
                tiebreak: str | None = None) -> DataFrame:
-    """last-observed forward-fill: frame = unboundedPreceding..currentRow."""
-    w = _w(by, order, tiebreak).rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    return df.withColumn(out or f"{col}_ffill", F.last(col, ignorenulls=True).over(w))
+    return df.withColumn(out or f"{col}_ffill", ffill_col(col, key_window(by, order, tiebreak)))
 
 
-def with_lang_stability(df: DataFrame, *, lang: str = "lang", by: str = "url",
-                        order: str = "warc_ts", ks: tuple[int, ...] = (1, 2)) -> DataFrame:
+def lang_stability_cols(w, *, lang: str = "lang",
+                        ks: tuple[int, ...] = (1, 2)) -> dict[str, Column]:
     """lang_stable_lagK: current lang equals lang K crawls ago (null →
     false on the first crawls, matching the golden pandas oracle)."""
-    w = _w(by, order)
-    for k in ks:
-        df = df.withColumn(
-            f"lang_stable_lag{k}",
-            F.coalesce(F.lag(lang, k).over(w) == F.col(lang), F.lit(False)),
-        )
-    return df
+    return {f"lang_stable_lag{k}":
+            F.coalesce(F.lag(lang, k).over(w) == F.col(lang), F.lit(False))
+            for k in ks}
+
+
+def gap_secs_col(w, order: str) -> Column:
+    """Seconds since the previous event of the key (null on the first),
+    in exact µs arithmetic — matches the DuckDB oracle bit-for-bit:
+    gap = (unix_micros(t) - unix_micros(prev)) / 1e6."""
+    ts = F.unix_micros(F.col(order).cast("timestamp"))
+    prev = F.unix_micros(F.lag(F.col(order)).over(w).cast("timestamp"))
+    return (ts - prev).cast("double") / F.lit(1e6)
+
+
+def session_id_col(w, gap_secs: float) -> Column:
+    """0-based session number per key over the ``gap_secs`` column: the
+    running sum of new-session flags (the first event, or a gap above
+    ``gap_secs``).  A window cannot nest in another, so ``gap_secs``
+    must come from an earlier projection."""
+    gap = F.col("gap_secs")
+    new_sess = F.when(gap.isNull() | (gap > gap_secs), 1).otherwise(0)
+    return F.sum(new_sess).over(
+        w.rowsBetween(Window.unboundedPreceding, Window.currentRow)) - F.lit(1)
 
 
 def sessionize(df: DataFrame, *, by: str = "url", order: str = "warc_ts",
@@ -76,16 +95,9 @@ def sessionize(df: DataFrame, *, by: str = "url", order: str = "warc_ts",
     0-based per key).  Batch idiom — running sum of new-session flags
     over an unbounded-preceding..currentRow frame.
     """
-    w = _w(by, order, tiebreak)
-    wsum = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    # exact µs arithmetic (matches the DuckDB oracle bit-for-bit):
-    # gap = (unix_micros(t) - unix_micros(prev)) / 1e6
-    ts = F.unix_micros(F.col(order).cast("timestamp"))
-    prev = F.unix_micros(F.lag(F.col(order)).over(w).cast("timestamp"))
-    df = df.withColumn("gap_secs", (ts - prev).cast("double") / F.lit(1e6))
-    new_sess = F.when(F.col("gap_secs").isNull() | (F.col("gap_secs") > gap_secs), 1).otherwise(0)
-    df = df.withColumn("session_id", F.sum(new_sess).over(wsum) - F.lit(1))
-    return df
+    w = key_window(by, order, tiebreak)
+    return (df.withColumn("gap_secs", gap_secs_col(w, order))
+            .withColumn("session_id", session_id_col(w, gap_secs)))
 
 
 def dedup_latest(df: DataFrame, *, by: list[str], order: str,
@@ -138,7 +150,7 @@ def with_change_features(df: DataFrame, *, by: str = "url",
     feature_vector adds zero additional shuffles; token sets are
     per-row scan-stage work.
     """
-    w = _w(by, order, tiebreak)
+    w = key_window(by, order, tiebreak)
     toks = F.when(
         F.length(F.trim(F.col(text_col))) == 0,
         F.expr("CAST(array() AS array<string>)"),
@@ -186,7 +198,7 @@ def recrawl_estimates(df: DataFrame, *, by: str = "url",
     other PIT feature shares — then a partial-agg groupBy.  Rounded to
     6 so the oracle compares stable doubles (one ln per key).
     """
-    w = _w(by, order, tiebreak)
+    w = key_window(by, order, tiebreak)
     ts = F.col(order).cast("timestamp").cast("double")
     d = (df.select(
             F.col(by),
@@ -226,7 +238,7 @@ def with_rolling_stats(df: DataFrame, col: str, *, by: str = "url",
     Scale notes: one hash exchange on ``by``, shared with every other
     window feature on the same key; the frame is row-bounded so state
     per key is O(n)."""
-    w = (_w(by, order, tiebreak).rowsBetween(-n, -1))
+    w = (key_window(by, order, tiebreak).rowsBetween(-n, -1))
     p = out_prefix or col
     c = F.col(col).cast("double")
     return (df

@@ -2,14 +2,23 @@
 
     pages ──extract_stage(mapInArrow: decode+validate+extract)──▶ text_extracted
           ──feature_vector(window ops, one shuffle on url)──────▶ features
-          ──asof_join(features ⟕ feature_src)───────────────────▶ enriched
+          ──asof_join(features ⟕ their own first crawl per url)─▶ enriched
 
 Shuffle census at scale: extract_stage is shuffle-free; feature_vector
 costs ONE hash exchange on `url` (all window functions share the same
-partitioning); asof_join is one more window over the union of its two
-sides, and both sides keep that url partitioning, so it moves nothing.
-The whole flagship is one exchange and one Python node (the extract
-MapInArrow) — asserted in tests/test_plans.py.
+partitioning); the as-of is one more window over the features, whose
+right rows (each url's first crawl, flagged by a row_number in the
+features' own Window node) are tagged by a generator on the same rows:
+the right-from-left form of ``asof_join``.  It moves nothing, reads the
+features once and persists nothing.  The whole flagship is one exchange
+and one Python node (the extract MapInArrow) — asserted in
+tests/test_plans.py.
+
+The plan is built in a few projections: the extract stage's select and
+MapInArrow, two feature projections (``session_id``'s window reads
+``gap_secs``, so it needs the second) and the as-of's generator, window,
+filter and final select.  Each DataFrame transformation re-analyzes the
+whole plan on the driver while the executors wait.
 
 ``run_checkpointed_pipeline`` snapshots the same three stages
 (text_extracted, features, features_enriched).  Its text_extracted
@@ -19,17 +28,19 @@ extract pass, so the checkpointed path has the same one Python node.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ultraviolet_spark.functions.udfs import extract_stage
 from ultraviolet_spark.operators.asof import asof_join
 from ultraviolet_spark.operators.windows import (
     SESSION_GAP_SECS_DEFAULT,
-    sessionize,
-    with_ffill,
-    with_lags,
-    with_lang_stability,
+    ffill_col,
+    gap_secs_col,
+    key_window,
+    lag_cols,
+    lang_stability_cols,
+    session_id_col,
 )
 
 FEATURE_COLS = [
@@ -38,6 +49,8 @@ FEATURE_COLS = [
     "text_len_lag1", "text_len_ffill",
 ]
 
+_FIRST = "__first_crawl"
+
 
 def feature_vector(
     text_extracted: DataFrame,
@@ -45,7 +58,7 @@ def feature_vector(
     by: str = "url",
     order: str = "warc_ts",
     gap_secs: float = SESSION_GAP_SECS_DEFAULT,
-    extra_cols: tuple[str, ...] = (),
+    extra_cols: tuple[str | Column, ...] = (),
     bucket_col: str | None = None,
 ) -> DataFrame:
     """text_extracted → features (SURVEY.md §1.2 schema).  All window
@@ -53,53 +66,68 @@ def feature_vector(
     ``text_len`` and ``cp_hist`` from ``extract_stage(…,
     with_features=True)``; this stage adds no Python node.
 
+    Two projections: every window column that reads only the input,
+    then ``session_id``, whose window reads ``gap_secs``.  ``extra_cols``
+    are pass-through names or Columns evaluated in the second
+    projection, beside ``session_id``.
+
     ``bucket_col``: name of a materialized bucket column (written by
     plans.layout.write_bucketed).  Windows then partition by
     (bucket, key) — semantically identical since bucket = f(key) — so a
     bucketed-table scan satisfies the clustering requirement and the
     whole feature stage plans with ZERO exchanges (tests/test_layout.py).
     """
-    f = text_extracted
-    keys = by if bucket_col is None else [bucket_col, by]
-    f = with_lang_stability(f, by=keys, order=order)
-    f = sessionize(f, by=keys, order=order, gap_secs=gap_secs)
-    f = with_lags(f, ["text_len"], by=keys, order=order)
-    # forward-fill of the last *cleanly decoded* length: rows whose html
-    # needed replacements observe null and inherit the last clean value.
-    f = f.withColumn(
-        "obs_len", F.when(F.col("valid_utf8"), F.col("text_len"))
-    )
-    f = with_ffill(f, "obs_len", by=keys, order=order, out="text_len_ffill")
+    w = key_window(by if bucket_col is None else [bucket_col, by], order)
+    f = text_extracted.withColumns({
+        **lang_stability_cols(w),
+        "gap_secs": gap_secs_col(w, order),
+        **lag_cols(["text_len"], w),
+        # forward-fill of the last *cleanly decoded* length: rows whose
+        # html needed replacements observe null and inherit the last
+        # clean value.
+        "text_len_ffill": ffill_col(
+            F.when(F.col("valid_utf8"), F.col("text_len")), w),
+    })
     bucket_extra = () if bucket_col is None else (bucket_col,)
-    return f.select(*FEATURE_COLS, *bucket_extra, *extra_cols)
+    return f.select(
+        *[session_id_col(w, gap_secs).alias(c) if c == "session_id" else c
+          for c in FEATURE_COLS], *bucket_extra, *extra_cols)
 
 
 def compute_features(pages: DataFrame, **kwargs) -> DataFrame:
     return feature_vector(extract_stage(pages, with_features=True), **kwargs)
 
 
-def enrich_asof(features: DataFrame, feature_src: DataFrame, **kwargs) -> DataFrame:
-    """features ⟕ (backward as-of) feature_src on (url, warc_ts)."""
+def enrich_asof(features: DataFrame, feature_src: DataFrame | str,
+                **kwargs) -> DataFrame:
+    """features ⟕ (backward as-of) feature_src on (url, warc_ts).
+    ``feature_src`` may name a boolean column of ``features`` instead:
+    the right-from-left form of ``asof_join``."""
     return asof_join(features, feature_src, **kwargs)
+
+
+def _first_crawl(keys) -> Column:
+    """True on each url's first crawl: the as-of's right rows.  Same
+    window as the features, so it shares their Window node."""
+    return (F.row_number().over(key_window(keys, "warc_ts")) == 1).alias(_FIRST)
+
+
+def _enrich_first_crawl(features: DataFrame, **kwargs) -> DataFrame:
+    """``features`` (carrying ``_FIRST``) ⟕ backward as-of its own
+    first crawl per url, as ``first_text_len``."""
+    return enrich_asof(features, _FIRST, on="warc_ts", by="url",
+                       value_cols={"first_text_len": "text_len"}, **kwargs)
 
 
 def flagship_enriched(pages: DataFrame, **kwargs) -> DataFrame:
     """pages → features → backward-as-of enrichment against the per-url
-    first-crawl snapshot.  The feature DataFrame feeds BOTH union
-    branches of the as-of, so it is persisted before branching — without
-    this the whole transcode+window pipeline would execute twice (on a
-    cluster the snapshot layer materializes it instead; see
-    run_checkpointed_pipeline)."""
-    from pyspark import StorageLevel
-
-    from ultraviolet_spark.operators.windows import dedup_latest
-
-    features = compute_features(pages, **kwargs).persist(
-        StorageLevel.MEMORY_AND_DISK)
-    src = dedup_latest(features, by=["url"], order="warc_ts", keep="first").select(
-        "url", "warc_ts", F.col("text_len").alias("first_text_len"))
-    return enrich_asof(features, src, on="warc_ts", by="url",
-                       value_cols=["first_text_len"])
+    first-crawl snapshot.  The right side is the features' own first
+    crawl, so the as-of takes its right-from-left form: the feature rows
+    are read once and tagged by a generator instead of feeding two union
+    branches, and nothing is persisted."""
+    features = feature_vector(extract_stage(pages, with_features=True),
+                              extra_cols=(_first_crawl("url"),), **kwargs)
+    return _enrich_first_crawl(features)
 
 
 def flagship_over_bucketed(spark, table: str, **kwargs) -> DataFrame:
@@ -113,17 +141,12 @@ def flagship_over_bucketed(spark, table: str, **kwargs) -> DataFrame:
     subsequent feature/as-of run over it shuffles NOTHING — windows,
     the as-of's included, partition by (bucket, key) on the
     materialized bucket."""
-    from ultraviolet_spark.operators.windows import dedup_latest
     from ultraviolet_spark.plans.layout import BUCKET_COL, read_bucketed
 
-    te = read_bucketed(spark, table)
-    features = feature_vector(te, bucket_col=BUCKET_COL, **kwargs)
-    src = dedup_latest(
-        features, by=[BUCKET_COL, "url"], order="warc_ts", keep="first"
-    ).select(BUCKET_COL, "url", "warc_ts",
-             F.col("text_len").alias("first_text_len"))
-    return enrich_asof(features, src, on="warc_ts", by="url",
-                       value_cols=["first_text_len"], bucket_col=BUCKET_COL)
+    keys = [BUCKET_COL, "url"]
+    features = feature_vector(read_bucketed(spark, table), bucket_col=BUCKET_COL,
+                              extra_cols=(_first_crawl(keys),), **kwargs)
+    return _enrich_first_crawl(features, bucket_col=BUCKET_COL)
 
 
 def run_checkpointed_pipeline(spark, pages: DataFrame, warehouse: str,
@@ -139,7 +162,6 @@ def run_checkpointed_pipeline(spark, pages: DataFrame, warehouse: str,
 
     Returns (enriched_features_df, {stage: resumed_bool}).
     """
-    from ultraviolet_spark.operators.windows import dedup_latest
     from ultraviolet_spark.plans.snapshots import (
         ParquetSnapshotFormat,
         fingerprint,
@@ -175,10 +197,7 @@ def run_checkpointed_pipeline(spark, pages: DataFrame, warehouse: str,
                  "max_session_id": F.max("session_id")})
 
     def build_enriched() -> DataFrame:
-        src = dedup_latest(feats, by=["url"], order="warc_ts", keep="first").select(
-            "url", "warc_ts", F.col("text_len").alias("first_text_len"))
-        return enrich_asof(feats, src, on="warc_ts", by="url",
-                           value_cols=["first_text_len"])
+        return _enrich_first_crawl(feats.select("*", _first_crawl("url")))
 
     fp3 = fingerprint("features_enriched", stage_key(fp2, build_features))
     enriched, resumed["features_enriched"] = run_stage(
